@@ -224,22 +224,16 @@ def lsh_candidate_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_k: int = 8,
-    persist_bands: bool = True,
 ) -> DataFrame:
     """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 band
     bucket. Self-equi-join on (band, h): the shuffle key cardinality is
-    #docs × bands; AQE splits skewed buckets.
-
-    ``persist_bands`` caches the (id, band, h) table so the self-join's
-    two sides share ONE signature computation instead of re-deriving it
-    per side (measured ~30% faster at sf0.1; the cache is band-table
-    sized — tiny next to the corpus — and LRU-evicted). Pass False for
-    one-shot pipelines that must leave no cache residency; at warehouse
-    scale, write the band table out once and self-join the stored copy.
+    #docs × bands; AQE splits skewed buckets. The (id, band, h) table is
+    persisted once so both join sides share one signature computation
+    (measured ~30% faster at sf0.1; the cache is band-table sized).
     """
-    b = minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
-    if persist_bands:
-        b = _persist_once(b)
+    b = _persist_once(
+        minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
+    )
     left = b.select(
         F.col(id_col).alias("doc_a"), F.col("band"), F.col("h")
     )
@@ -906,10 +900,8 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    probe_every: int = 1,
     reliable: bool = False,
     strategy: str = "auto",
-    doubling_hops: int = 1,
 ) -> DataFrame:
     """(node, component_id) for every node in ``edges``, where
     component_id is the MINIMUM node id reachable in the undirected
@@ -951,34 +943,29 @@ def connected_components(
     rounds at small scale are stage-barrier-bound, so shuffles per
     round ARE the wall clock). ONE doubling hop per round: a second
     hop measured round-count-neutral on the LSH graph and its extra
-    self-join cost ~2 s/run — more hops only pay on graphs whose
-    remaining depth per round exceeds 2^hops. The convergence probe
-    exploits monotonicity: per-node labels never increase, so
-    ``sum(lab)`` is unchanged iff NO label changed — one
-    scan-and-aggregate of the checkpointed label table (no join
-    against the previous round's labels, no extra shuffle).
+    self-join cost ~2 s/run, and at 20.8M edges two hops were slower
+    too (SCALE.md §16, §22). The convergence probe exploits
+    monotonicity: per-node labels never increase, so ``sum(lab)`` is
+    unchanged iff NO label changed — one scan-and-aggregate of the
+    checkpointed label table (no join against the previous round's
+    labels, no extra shuffle).
 
-    Labels are checkpointed each probe round to truncate lineage
+    Labels are checkpointed and probed every round to truncate lineage
     (each round references the previous label table twice — the
     neighborhood join and the doubling self-join — so the un-truncated
-    plan tree doubles per round). ``probe_every`` sets the probe/
-    checkpoint cadence: 1 probes (and checkpoints) every round; 2
-    leaves alternate rounds unmaterialized inside the next probe's
-    job. 1 is the measured winner and the default — a controlled
-    interleaved A/B at sf0.1 (see SCALE.md §16) showed the cadence-2
-    variant ~1.4x SLOWER because the unmaterialized round's
-    pointer-doubling subtree is NOT deduplicated by exchange reuse in
-    the skip+probe mega-plan, so its join work executes twice.
+    plan tree doubles per round). Probing every other round measured
+    ~1.4x SLOWER at sf0.1 (SCALE.md §16): the unmaterialized round's
+    pointer-doubling subtree is not deduplicated by exchange reuse, so
+    its join work executes twice.
 
     Checkpoint regimes: ``reliable=False`` (default) uses
     ``localCheckpoint`` — fastest, but blocks live only on their
     executor, so an executor loss kills the job; fine on local[*].
-    ``reliable=True`` writes each probe round's labels to the
-    SparkContext checkpoint dir (set one via
-    ``sc.setCheckpointDir``; falls back to a process-local temp dir,
-    which is only correct single-node) — survives executor loss, the
-    right regime for a long dedup job on a 1000-executor cluster with
-    dynamic allocation or spot instances.
+    ``reliable=True`` writes each round's labels to the SparkContext
+    checkpoint dir (set one via ``sc.setCheckpointDir``; falls back to
+    a process-local temp dir, which is only correct single-node) —
+    survives executor loss, the right regime for a long dedup job on a
+    1000-executor cluster with dynamic allocation or spot instances.
 
     Cache contract: ``DataFrame.unpersist()`` cannot free
     local-checkpoint blocks (they bypass the CacheManager), so stale
@@ -1014,7 +1001,7 @@ def connected_components(
     # One action materializes the upstream plan AND yields the edge count
     # used to pick the strategy and size the iteration tables below.
     n_sym = sym.count()
-    if strategy not in ("auto", "local", "distributed", "star"):
+    if strategy not in ("auto", "local", "distributed"):
         raise ValueError(f"unknown connected_components strategy {strategy!r}")
     if strategy == "auto":
         strategy = "local" if n_sym <= _CC_SINGLE_TASK_EDGES else "distributed"
@@ -1028,8 +1015,6 @@ def connected_components(
         # result themselves; sym stays persisted until release.
         out._cc_setup_cache = sym
         return out
-    if strategy == "star":
-        return _cc_star_loop(sym, n_sym, max_iter)
     nodes = _persist_once(sym.select("n").distinct())
     # Self-loops fold "own label" into the neighborhood aggregate, so
     # each round's closed-neighborhood minimum is ONE join + groupBy
@@ -1081,7 +1066,7 @@ def connected_components(
         # Single-node fallback ONLY: on a cluster the checkpoint dir
         # must be shared storage (HDFS/S3) — set it up front. The dir is
         # operator-owned and rmtree'd by release_components; reliable
-        # checkpoint FILES (one label table per probe round) are deleted
+        # checkpoint FILES (one label table per round) are deleted
         # as each round is superseded, so repeated calls don't accrete
         # a machine-lifetime pile of checkpoint data.
         own_tmpdir = tempfile.mkdtemp(prefix="cc-ckpt-")
@@ -1104,7 +1089,7 @@ def connected_components(
     known_dirs = _ckpt_child_dirs(sc) if reliable else set()
     ckpt_dirs: set[str] = set()
     init_labels = labels
-    for it in range(max_iter):
+    for _ in range(max_iter):
         new_labels = (
             withself.join(labels.withColumnRenamed("n", "m"), on="m")
             .groupBy("n")
@@ -1114,37 +1099,21 @@ def connected_components(
         # (labels ARE node ids, and every label value appears as a node
         # in new_labels, so the lookup is a self-join on the label).
         # lab(x) <= x guarantees the hop never increases a label.
-        # ``doubling_hops`` applies the hop N times per round — each
-        # extra hop references the current label plan twice, so its
-        # cost compounds; 1 is the measured default at every scale
-        # tried (58k pairs: §16; 20.8M edges: §22 round-8 A/B).
-        for _hop in range(doubling_hops):
-            parent = new_labels.select(
-                F.col("n").alias("lab"), F.col("lab").alias("lab2")
-            )
-            new_labels = new_labels.join(parent, on="lab", how="left").select(
-                "n", F.coalesce(F.col("lab2"), F.col("lab")).alias("lab")
-            )
-        # Probe cadence: labels are monotone non-increasing, so sum
-        # unchanged across probe_every rounds still implies a fixed
-        # point — convergence stays exact at any cadence. Skip rounds
-        # stay unmaterialized inside the next probe's job. Measured
-        # (SCALE.md §16): cadence 1 wins — the skip round's join
-        # subtree is not exchange-reused and executes twice.
-        probe_round = it % probe_every == probe_every - 1 or it + 1 == max_iter
-        if probe_round:
-            # Checkpoint truncates the lineage, which otherwise doubles
-            # per round (two references to the previous labels).
-            # eager=False so the probe below is what materializes it;
-            # localCheckpoint persists its RDD itself — an extra
-            # .persist() would just orphan a cache entry per round.
-            if reliable:
-                new_labels = new_labels.checkpoint(eager=False)
-            else:
-                new_labels = new_labels.localCheckpoint(eager=False)
-        labels = new_labels
-        if not probe_round:
-            continue
+        parent = new_labels.select(
+            F.col("n").alias("lab"), F.col("lab").alias("lab2")
+        )
+        new_labels = new_labels.join(parent, on="lab", how="left").select(
+            "n", F.coalesce(F.col("lab2"), F.col("lab")).alias("lab")
+        )
+        # Checkpoint truncates the lineage, which otherwise doubles per
+        # round (two references to the previous labels). eager=False so
+        # the probe below is what materializes it; localCheckpoint
+        # persists its RDD itself — an extra .persist() would just
+        # orphan a cache entry per round.
+        if reliable:
+            labels = new_labels.checkpoint(eager=False)
+        else:
+            labels = new_labels.localCheckpoint(eager=False)
         cur_sum = labels.agg(F.sum("lab")).collect()[0][0] or 0
         # The probe materialized this round's checkpoint; the previous
         # round's blocks (and, after the first probe, the initial label
@@ -1194,145 +1163,6 @@ def connected_components(
         out._cc_ckpt_dirs = frozenset(ckpt_dirs)
         out._cc_ckpt_tmpdir = own_tmpdir
     return out
-
-
-def _cc_star_loop(sym: DataFrame, n_sym: int, max_iter: int) -> DataFrame:
-    """Large-star / small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) — the classic
-    alternative to min-label propagation, A/B'd against the default
-    distributed loop per VERDICT r8 item 5. Explicitly selectable via
-    ``connected_components(..., strategy="star")``; never chosen by
-    auto (the A/B verdict lives in SCALE.md §23).
-
-    State is the EDGE table itself (canonically oriented child>parent),
-    rewritten each round instead of a static edge table joined against
-    a label table:
-
-    * large-star: every node connects its strictly-LARGER neighbors to
-      the minimum of its closed neighborhood — long chains fold toward
-      minima from every local dip at once;
-    * small-star: every node connects its smaller-or-equal neighbors
-      (and itself) to that minimum — stars flatten.
-
-    Termination is an EXACT structural test, not a fixpoint-theory
-    argument: the edge table is a star forest iff (1) no child has two
-    parents and (2) no parent is itself a child — both checked every
-    round on the current table; LS and SS are identities on star
-    forests, and both preserve connectivity, so stopping there is
-    exact. Labels then read straight off the edges: child -> parent,
-    and any node never appearing as a child (roots, singletons) labels
-    itself.
-
-    Each phase's output is localCheckpoint'd: the next phase reads its
-    input from two subtrees (the neighborhood aggregate and the join
-    back), and RDD-level block reuse computes a checkpointed phase once
-    where plan-subtree reuse would execute it twice. Superseded rounds'
-    blocks are freed by the same JVM-side id census the default loop
-    uses. Cluster regime note: this A/B strategy implements only the
-    local-checkpoint regime; use the default loop for
-    ``reliable=True``."""
-    spark = sym.sparkSession
-    sc = spark.sparkContext
-    # One canonical row per undirected edge; checkpointed because round
-    # 1 reads it from two subtrees (aggregate + join back).
-    e = (
-        sym.where(F.col("n") > F.col("m"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = _persist_once(sym.select("n").distinct())
-    nodes.count()
-
-    def both_ways(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("n"), F.col("m")),
-                    F.struct(F.col("m").alias("n"), F.col("n").alias("m")),
-                )
-            ).alias("__e")
-        ).select("__e.n", "__e.m")
-
-    def closed_nbr_min(sym2: DataFrame) -> DataFrame:
-        return (
-            sym2.groupBy("n")
-            .agg(F.min("m").alias("mn"))
-            .select("n", F.least("n", "mn").alias("ms"))
-        )
-
-    known_ids = _persistent_rdd_ids(sc)
-    ckpt_ids: set[int] = set()
-    converged = False
-    for _it in range(max_iter):
-        # Large-star: from each orientation (u -> v) with v > u, emit
-        # (v, min(closed nbrhood of u))  — child stays > parent.
-        sym2 = both_ways(e)
-        ls = (
-            sym2.where(F.col("m") > F.col("n"))
-            .join(closed_nbr_min(sym2), on="n")
-            .select(F.col("m").alias("n"), F.col("ms").alias("m"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # Small-star over the large-star output: smaller neighbors and
-        # self connect to the closed-neighborhood min.
-        sym3 = both_ways(ls)
-        nbr2 = closed_nbr_min(sym3)
-        ss = (
-            sym3.where(F.col("m") < F.col("n"))
-            .join(nbr2, on="n")
-            .select(F.col("m").alias("n"), F.col("ms").alias("m"))
-            .unionByName(nbr2.select("n", F.col("ms").alias("m")))
-            .where(F.col("n") != F.col("m"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # Exact star-forest probe; the first aggregate materializes the
-        # round's checkpoints.
-        max_parents = (
-            ss.groupBy("n")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c"))
-            .collect()[0][0]
-        ) or 0
-        chained = (
-            ss.join(ss.select(F.col("n").alias("m")).distinct(), on="m", how="leftsemi")
-            .limit(1)
-            .count()
-        )
-        now_ids = _persistent_rdd_ids(sc)
-        fresh = now_ids - known_ids
-        _unpersist_rdd_ids(sc, ckpt_ids)
-        known_ids = (known_ids | fresh) - ckpt_ids
-        ckpt_ids = fresh
-        if _it == 0:
-            # Round 1's probe materialized e0's checkpoint blocks; the
-            # upstream (possibly an LSH self-join) is never read again.
-            sym.unpersist()
-        e = ss
-        if max_parents <= 1 and chained == 0:
-            converged = True
-            break
-    if not converged:
-        nodes.unpersist()
-        _unpersist_rdd_ids(sc, ckpt_ids)
-        raise RuntimeError(
-            f"star connected_components did not converge in {max_iter} "
-            "rounds — raise max_iter"
-        )
-    labels = e.select(
-        F.col("n").alias("node"), F.col("m").alias("component_id")
-    ).unionByName(
-        nodes.join(e.select("n"), on="n", how="left_anti").select(
-            F.col("n").alias("node"), F.col("n").alias("component_id")
-        )
-    )
-    # The returned frame reads the final checkpoint's blocks AND the
-    # node cache (for the root/singleton anti-join) — both released via
-    # release_components, NOT here (the caller hasn't materialized yet).
-    labels._cc_checkpoint_ids = frozenset(ckpt_ids)
-    labels._cc_setup_cache = nodes
-    return labels
 
 
 # --------------------------------------------------------------------------
@@ -1422,7 +1252,7 @@ def _set_reprs_int(toks_i: DataFrame, n_vocab: int):
     ``inter(a, b)`` = a BIGINT Column sizing the exact intersection of
     two ``__rep`` values. Bitset tier when the whole dictionary fits
     ``_VERIFY_BITSET_MAX_TERMS`` bits, int arrays otherwise (both
-    exact; A/B'd in tools/probe_r18_exp1.py)."""
+    exact; the A/B is in SCALE.md and git history)."""
     if n_vocab <= _VERIFY_BITSET_MAX_TERMS:
         nwords = max(1, (n_vocab + 63) // 64)
         reps = toks_i.groupBy("__id").agg(

@@ -292,8 +292,7 @@ def _assign_cells_arrow(
 
     from pyspark.sql import types as T
 
-    k = len(cents)
-    c = np.asarray(cents, dtype=np.float64)
+    books = np.asarray([cents], dtype=np.float64)
     base = df.select(id_col, vec_col)
     schema = T.StructType(
         list(base.schema.fields)
@@ -301,18 +300,10 @@ def _assign_cells_arrow(
     )
 
     def run(batches):
-        cn = np.linalg.norm(c, axis=1)
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            xn = np.linalg.norm(x, axis=1)
-            denom = np.outer(xn, cn)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(denom > 0, (x @ c.T) / denom, -np.inf)
-            cell = k - 1 - np.argmax(scores[:, ::-1], axis=1)
+            cell = _cosine_codes(_stack_vectors(pdf, vec_col), books)[:, 0]
             out = pdf[[id_col, vec_col]].copy()
             out["__cell"] = cell.astype("int32")
             yield out
@@ -425,7 +416,212 @@ def ivf_topk(
     )
 
 
-# --- k-means centroid training (Lloyd's algorithm) -------------------------
+# --- Lloyd training: k-means centroids and PQ codebooks --------------------
+
+# Vector-elements budget (n_vectors x dim) at or below which training
+# runs as ONE executor-side task instead of the iterative distributed
+# loop: ~30 MB of float64 — trivially one task's memory, and below it
+# every distributed Lloyd stage is barrier overhead around
+# sub-millisecond numpy work (the connected-components §16 lesson
+# applied to the trainer).
+_KMEANS_SINGLE_TASK_ELEMENTS = 4_000_000
+
+
+def _cosine_codes(x, books):
+    """(n, 1) cell ids against the single book ``books[0]``: argmax
+    cosine with ties to the LARGER cell (the struct-max ordering of
+    :func:`_cell_expr`); zero-norm rows fall to the last cell."""
+    import numpy as np
+
+    c = books[0]
+    k = len(c)
+    denom = np.outer(np.linalg.norm(x, axis=1), np.linalg.norm(c, axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        scores = np.where(denom > 0, (x @ c.T) / denom, -np.inf)
+    return (k - 1 - np.argmax(scores[:, ::-1], axis=1))[:, None]
+
+
+def _l2_codes(x, books):
+    """(n, m) codeword ids: per subspace the L2-nearest codeword, ties
+    to the SMALLER id (the array_min ordering of :func:`_pq_codes`)."""
+    import numpy as np
+
+    dsub = books.shape[2]
+    codes = np.empty((len(x), len(books)), dtype=np.int64)
+    for j, b in enumerate(books):
+        s = x[:, j * dsub : (j + 1) * dsub]
+        d2 = (
+            (s * s).sum(axis=1)[:, None]
+            - 2.0 * (s @ b.T)
+            + (b * b).sum(axis=1)[None, :]
+        )
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _lloyd_sums(x, books, codes_fn):
+    """The Lloyd step: assign every row of ``x`` with ``codes_fn`` and
+    return the per-(subspace, codeword) member sums (m x k x dsub) and
+    member counts (m x k)."""
+    import numpy as np
+
+    m, k, dsub = books.shape
+    sums = np.zeros(books.shape)
+    counts = np.zeros((m, k), dtype=np.int64)
+    codes = codes_fn(x, books)
+    for j in range(m):
+        s = x[:, j * dsub : (j + 1) * dsub]
+        for c in np.unique(codes[:, j]):
+            mask = codes[:, j] == c
+            sums[j, c] = s[mask].sum(axis=0)
+            counts[j, c] = mask.sum()
+    return sums, counts
+
+
+def _lloyd_update(books, sums, counts):
+    """(new books, largest per-coordinate movement): each codeword moves
+    to sums / counts (bitwise the member mean); empty ones stay put."""
+    import numpy as np
+
+    n = counts[..., None]
+    new = np.divide(sums, n, out=books.copy(), where=n > 0)
+    return new, float(np.max(np.abs(new - books)))
+
+
+def _stack_vectors(pdf, vec_col: str):
+    import numpy as np
+
+    return np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+
+
+def _train_lloyd(
+    df: DataFrame,
+    k: int,
+    m: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    tol: float,
+    strategy: str,
+    codes_fn,
+):
+    """(books m x k x dsub, persisted training projection): Lloyd over
+    ``df`` from init = the first ``k`` vectors by id, split into ``m``
+    subspaces. k-means is m = 1 with ``_cosine_codes``; PQ is m books
+    with ``_l2_codes``. Only the assignment differs; the update, the
+    empty-codeword rule and the ``tol`` early exit are shared.
+
+    ``strategy``: ``"auto"`` trains in ONE executor task when
+    n_vectors x dim fits ``_KMEANS_SINGLE_TASK_ELEMENTS`` (at that size
+    every distributed stage is job-barrier overhead — measured at
+    sf0.1's 2,000x64 embeddings the whole trainer is barriers), else the
+    distributed loop that scales to 10^10 vectors; ``"local"`` /
+    ``"distributed"`` pin it. Both run :func:`_lloyd_sums` and
+    :func:`_lloyd_update` and differ only in float summation order.
+
+    Distributed iteration = Arrow-batched PARTIAL SUMS: each task runs
+    the numpy step over its cached partition and emits m*k rows of
+    (subspace, codeword, count, per-dim sum); one (j, code, dim) shuffle
+    of those partials combines them and the driver divides. Arrow
+    batches, not column expressions: higher-order lambdas evaluate per
+    ELEMENT with no whole-stage codegen, while the batch does the same
+    arithmetic as one numpy matmul (interleaved A/B on the 80k x 64-d
+    strain set: 3.4 s -> 0.5 s per iteration, SCALE.md §22). Shuffle
+    volume is m*k*partitions rows, independent of the table size;
+    driver traffic is m*k*dsub doubles per iteration."""
+    import numpy as np
+    import pandas as pd
+
+    if strategy not in ("auto", "local", "distributed"):
+        raise ValueError(f"unknown Lloyd strategy {strategy!r}")
+    # The init collect doubles as the cache materialization: TakeOrdered
+    # over the to-be-persisted projection scans the source exactly once.
+    # _ensure_parallelism: a small parquet source scans as ONE split,
+    # which would run every Lloyd assignment + the caller's probe scan
+    # on a single core (measured at sf0.1: each iteration ~1.2 s on one
+    # task); at lake scale the input is already well-split and this is
+    # a no-op.
+    train = _ensure_parallelism(df.select(id_col, vec_col)).persist()
+    first = train.orderBy(id_col).select(vec_col).limit(k).collect()
+    if len(first) < k:
+        train.unpersist()
+        raise ValueError(f"need at least {k} vectors, found {len(first)}")
+    dim = len(first[0][0])
+    if dim % m:
+        train.unpersist()
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    books = np.asarray([r[0] for r in first], dtype=np.float64)
+    books = np.ascontiguousarray(books.reshape(k, m, dim // m).swapaxes(0, 1))
+    if strategy == "auto":
+        # count() runs over the just-materialized cache — cheap, and the
+        # honest size signal (row width comes from the init vectors).
+        fits = train.count() * dim <= _KMEANS_SINGLE_TASK_ELEMENTS
+        strategy = "local" if fits else "distributed"
+    if strategy == "local":
+        # ONE executor task (coalesce(1) + mapInPandas) over every row
+        # stacked in id order; driver traffic is the trained books'
+        # collect, same as one distributed iteration.
+        def run(batches, b=books):
+            pdfs = [pdf for pdf in batches if len(pdf)]
+            ids = np.concatenate([pdf[id_col].to_numpy() for pdf in pdfs])
+            x = np.vstack([_stack_vectors(pdf, vec_col) for pdf in pdfs])
+            x = x[np.argsort(ids, kind="stable")]
+            for _ in range(iters):
+                b, moved = _lloyd_update(b, *_lloyd_sums(x, b, codes_fn))
+                if moved < tol:
+                    break
+            yield pd.DataFrame(
+                {"j": range(len(b)), "book": [bj.tolist() for bj in b]}
+            )
+
+        rows = (
+            train.coalesce(1)
+            .mapInPandas(run, schema="j long, book array<array<double>>")
+            .collect()
+        )
+        rows.sort(key=lambda r: r["j"])
+        return np.asarray([r["book"] for r in rows]), train
+
+    for _ in range(iters):
+
+        def partials(batches, _b=books):
+            sums = np.zeros(_b.shape)
+            counts = np.zeros(_b.shape[:2], dtype=np.int64)
+            for pdf in batches:
+                if len(pdf):  # empty Arrow batch: vstack would raise
+                    x = _stack_vectors(pdf, vec_col)
+                    s, c = _lloyd_sums(x, _b, codes_fn)
+                    sums += s
+                    counts += c
+            j, code = np.indices(counts.shape)
+            yield pd.DataFrame(
+                {
+                    "j": j.ravel(),
+                    "code": code.ravel(),
+                    "cnt": counts.ravel(),
+                    "s": [r.tolist() for r in sums.reshape(-1, _b.shape[2])],
+                }
+            )
+
+        rows = (
+            train.mapInPandas(
+                partials, schema="j long, code long, cnt long, s array<double>"
+            )
+            .select("j", "code", "cnt", F.posexplode("s").alias("dim", "v"))
+            .groupBy("j", "code", "dim")
+            .agg(F.sum("v").alias("sv"), F.sum("cnt").alias("cn"))
+            .collect()
+        )
+        sums = np.zeros(books.shape)
+        counts = np.zeros(books.shape[:2], dtype=np.int64)
+        for r in rows:
+            sums[r["j"], r["code"], r["dim"]] = r["sv"]
+            counts[r["j"], r["code"]] = r["cn"]
+        books, moved = _lloyd_update(books, sums, counts)
+        if moved < tol:
+            break
+    return books, train
+
 
 def train_kmeans(
     df: DataFrame,
@@ -436,35 +632,22 @@ def train_kmeans(
     tol: float = 1e-4,
     strategy: str = "auto",
 ) -> list[list[float]]:
-    """Distributed Lloyd's k-means over an embedding column; returns the
-    trained centroids (feed them to :func:`ivf_topk` for trained IVF
-    cells).
+    """Lloyd's k-means over an embedding column; returns the trained
+    centroids (feed them to :func:`ivf_topk` for trained IVF cells).
 
-    Per iteration the cluster assignment is a pure column expression
-    (:func:`_cell_expr` — argmax cosine over k centroids, no UDF), and
-    the centroid update is ONE (cell, dim) shuffle of map-side-combined
-    partial sums via posexplode. Driver traffic per iteration is exactly
-    k x dim mean rows — constant in the table size, the property that
-    lets the same loop run on 10^10 vectors. The plan does not grow with
-    iterations; moreover the centroids enter through a BROADCAST
-    single-row table rather than literals, so every iteration submits
-    the IDENTICAL plan (only the broadcast payload changes) and
-    whole-stage-codegen compiles once for the whole loop — with literal
-    centroids each round re-analyzed and re-JIT'd a fresh expression,
-    which dominated wall-clock on benched inputs. No lineage
-    checkpointing is needed, unlike label-propagation loops.
-
+    Assignment is argmax cosine with ties to the larger cell (the rule
+    of :func:`_cell_expr`), evaluated by numpy over Arrow batches; the
+    update is the member mean (strategies: :func:`_train_lloyd`).
     Deterministic: init = first k vectors by id; empty cells keep their
-    previous centroid. Mean-of-doubles is shuffle-order dependent in the
-    last ulp, so trained centroids are reproducible in value but not
-    bitwise — callers needing bitwise stability should round.
+    previous centroid. The distributed strategy's sums are shuffle-order
+    dependent in the last ulp, so its centroids are reproducible in
+    value but not bitwise — callers needing bitwise stability should
+    round.
 
     ``iters`` is a CAP, not a count: the loop exits as soon as the
-    largest per-coordinate centroid movement drops below ``tol``
-    (measured free on the driver — the k x dim means are already
-    there). Lloyd's movement shrinks geometrically on clustered data,
-    so the cap is rarely reached; each saved iteration saves one full
-    assignment scan + one (cell, dim) shuffle.
+    largest per-coordinate centroid movement drops below ``tol``;
+    Lloyd's movement shrinks geometrically on clustered data, so the cap
+    is rarely reached.
     """
     cents, train = train_kmeans_with_cache(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, tol=tol,
@@ -472,75 +655,6 @@ def train_kmeans(
     )
     train.unpersist()
     return cents
-
-
-# Vector-elements budget (n_vectors x dim) at or below which k-means
-# training runs as ONE executor-side task instead of the iterative
-# distributed loop: ~30 MB of float64 — trivially one task's memory,
-# and below it every distributed Lloyd stage is barrier overhead
-# around sub-millisecond numpy work (the connected-components §16
-# lesson applied to the trainer).
-_KMEANS_SINGLE_TASK_ELEMENTS = 4_000_000
-
-
-def _lloyd_local_task(
-    train: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    tol: float,
-) -> list[list[float]]:
-    """Full Lloyd training in ONE executor task (``coalesce(1)`` +
-    ``mapInPandas``): init = first k vectors by id, assignment = argmax
-    cosine with the same larger-cell tie-break as :func:`_cell_expr`,
-    empty cells keep their centroid, ``tol`` early-exit — the exact
-    update rule of the distributed loop, differing only in float
-    summation order (documented: trained centroids are value- but not
-    bitwise-reproducible either way). Driver traffic is the k x dim
-    centroid collect, same as one distributed iteration's means."""
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        ids: list = []
-        vecs: list = []
-        for pdf in batches:
-            ids.extend(pdf[id_col].tolist())
-            vecs.extend([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        order = np.argsort(np.asarray(ids), kind="stable")
-        x = np.vstack([vecs[i] for i in order])
-        cents = x[:k].copy()
-        xn = np.linalg.norm(x, axis=1)
-        for _ in range(iters):
-            cn = np.linalg.norm(cents, axis=1)
-            denom = np.outer(xn, cn)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(denom > 0, (x @ cents.T) / denom, -np.inf)
-            # argmax with ties to the LARGER cell id — the struct-max
-            # ordering of _cell_expr.
-            rev = scores[:, ::-1]
-            cell = k - 1 - np.argmax(rev, axis=1)
-            new_cents = cents.copy()
-            for c in range(k):
-                members = x[cell == c]
-                if len(members):
-                    new_cents[c] = members.mean(axis=0)
-            moved = float(np.max(np.abs(new_cents - cents)))
-            cents = new_cents
-            if moved < tol:
-                break
-        yield pd.DataFrame(
-            {"cell": list(range(k)), "centroid": [c.tolist() for c in cents]}
-        )
-
-    rows = (
-        train.coalesce(1)
-        .mapInPandas(run, schema="cell long, centroid array<double>")
-        .collect()
-    )
-    return [list(r["centroid"]) for r in sorted(rows, key=lambda r: r["cell"])]
 
 
 def train_kmeans_with_cache(
@@ -561,127 +675,11 @@ def train_kmeans_with_cache(
     unpersist. MEMORY_AND_DISK via the default persist(): at 10^10
     vectors the working set spills rather than recomputes, and
     partially-cached partitions stay correct.
-
-    ``strategy``: ``"auto"`` trains in ONE executor-side task when
-    n_vectors x dim fits the ~30 MB single-task budget (at that size
-    every distributed stage is job-barrier overhead — measured at
-    sf0.1's 2,000x64 embeddings the whole trainer is barriers), else
-    the distributed loop that scales to 10^10 vectors: Arrow-batched
-    numpy partial sums per partition combined by a (cell, dim) shuffle
-    of k rows per partition. ``"local"`` / ``"distributed"`` pin it.
-    Both produce the same centroids up to float summation order.
     """
-    if strategy not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown train_kmeans strategy {strategy!r}")
-    # The init collect doubles as the cache materialization: TakeOrdered
-    # over the to-be-persisted projection scans the source exactly once.
-    # _ensure_parallelism: a small parquet source scans as ONE split,
-    # which would run every Lloyd assignment + the caller's probe scan
-    # on a single core (measured at sf0.1: each iteration ~1.2 s on one
-    # task); at lake scale the input is already well-split and this is
-    # a no-op.
-    train = _ensure_parallelism(df.select(id_col, vec_col)).persist()
-    init = train.orderBy(id_col).select(vec_col).limit(k).collect()
-    cents: list[list[float]] = [[float(x) for x in r[0]] for r in init]
-    if len(cents) < k:
-        raise ValueError(f"need at least k={k} vectors, found {len(cents)}")
-    if strategy == "auto":
-        # count() runs over the just-materialized cache — cheap, and the
-        # honest size signal (row width comes from the init vectors).
-        n_vec = train.count()
-        dim = len(cents[0])
-        strategy = (
-            "local"
-            if n_vec * dim <= _KMEANS_SINGLE_TASK_ELEMENTS
-            else "distributed"
-        )
-    if strategy == "local":
-        return (
-            _lloyd_local_task(train, k, iters, id_col, vec_col, tol),
-            train,
-        )
-
-    # Distributed iteration = Arrow-batched PARTIAL SUMS: each task runs
-    # the numpy assignment (same argmax-cosine rule as _cell_expr,
-    # ties to the LARGER cell) over its cached partition and emits k
-    # rows of (cell, count, per-dim sum); a (cell, dim) shuffle of those
-    # partials — k rows per partition, not one row per VECTOR element —
-    # combines them, and the driver divides. This replaced the pure
-    # column-expression iteration (higher-order transform/aggregate
-    # lambdas + posexplode of every vector element): an interleaved A/B
-    # on the 80k x 64-d strain set measured 3.4 s -> 0.5 s per
-    # iteration (SCALE.md §22) — HOF lambdas evaluate per ELEMENT with
-    # no whole-stage codegen, while the Arrow batch does the same
-    # arithmetic as one numpy matmul. Per-row Python stays banned; this
-    # is the sanctioned vectorized-batch path, and at 10^10 vectors the
-    # shuffle carries k*dim*partitions doubles instead of n*dim.
-    import numpy as np
-    import pandas as pd
-
-    dim = len(cents[0])
-
-    for _ in range(iters):
-        cents_np = np.asarray(cents, dtype=np.float64)
-
-        def partials(batches, _c=cents_np):
-            sums = np.zeros((k, dim))
-            cnts = np.zeros(k, dtype=np.int64)
-            cn = np.linalg.norm(_c, axis=1)
-            for pdf in batches:
-                if not len(pdf):  # empty Arrow batch: vstack would raise
-                    continue
-                x = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                xn = np.linalg.norm(x, axis=1)
-                denom = np.outer(xn, cn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, (x @ _c.T) / denom, -np.inf)
-                # argmax with ties to the LARGER cell id — the
-                # struct-max ordering of _cell_expr.
-                cell = k - 1 - np.argmax(scores[:, ::-1], axis=1)
-                for c in np.unique(cell):
-                    m = cell == c
-                    sums[c] += x[m].sum(axis=0)
-                    cnts[c] += int(m.sum())
-            yield pd.DataFrame(
-                {
-                    "cell": list(range(k)),
-                    "cnt": cnts.tolist(),
-                    "s": [row.tolist() for row in sums],
-                }
-            )
-
-        rows = (
-            train.mapInPandas(partials, schema="cell long, cnt long, s array<double>")
-            .select("cell", "cnt", F.posexplode("s").alias("dim", "v"))
-            .groupBy("cell", "dim")
-            .agg(F.sum("v").alias("sv"), F.sum("cnt").alias("cn"))
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        cnt_by_cell: dict[int, int] = {}
-        for r in rows:
-            by_cell.setdefault(r["cell"], {})[r["dim"]] = r["sv"]
-            cnt_by_cell[r["cell"]] = r["cn"]
-        new_cents = [
-            [by_cell[c][d] / cnt_by_cell[c] for d in sorted(by_cell[c])]
-            if cnt_by_cell.get(c)
-            else cents[c]
-            for c in range(k)
-        ]
-        moved = max(
-            (
-                abs(a - b)
-                for old, new in zip(cents, new_cents)
-                for a, b in zip(old, new)
-            ),
-            default=0.0,
-        )
-        cents = new_cents
-        if moved < tol:
-            break
-    return cents, train
+    books, train = _train_lloyd(
+        df, k, 1, iters, id_col, vec_col, tol, strategy, _cosine_codes
+    )
+    return books[0].tolist(), train
 
 
 # --- PQ (product quantization) ANN ----------------------------------------
@@ -732,15 +730,10 @@ def train_pq(
     L2 k-means codebook. Returns ``codebooks[j][i] = centroid i of
     subspace j`` (list of m lists of ksub vectors of dim/m doubles).
 
-    All m subspaces train JOINTLY in one Lloyd loop: per iteration ONE
-    Arrow-batched scan encodes every row (numpy d2 matrices per
-    subspace inside mapInPandas — the vectorized-batch path, never
-    per-row Python) and emits m*ksub partial (sum, count) rows per
-    partition; ONE (subspace, codeword, dim) shuffle of those partials
-    computes every codebook's means — shuffle volume is
-    m*ksub*partitions rows, independent of the table size, and cost
-    per iteration is independent of m. Driver traffic is
-    m * ksub * dsub doubles per iteration — constant in table size.
+    All m subspaces train JOINTLY in the one Lloyd loop of
+    :func:`_train_lloyd` — one scan per iteration encodes every row
+    (per-subspace L2 argmin, ties to the smaller codeword, the rule of
+    :func:`_pq_codes`), so the cost per iteration is independent of m.
     Deterministic init: subspace j seeds from the first ksub vectors by
     id, so retrains reproduce. ``iters`` is a cap with a
     movement-threshold early exit like train_kmeans.
@@ -751,75 +744,6 @@ def train_pq(
     )
     train.unpersist()
     return books
-
-
-def _pq_local_task(
-    train: DataFrame,
-    m: int,
-    ksub: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    tol: float,
-    dsub: int,
-) -> list[list[list[float]]]:
-    """Joint PQ training in ONE executor task — the
-    :func:`_lloyd_local_task` move applied to the m-subspace loop:
-    same update rule as the distributed path (L2 argmin per subspace
-    with ties to the SMALLER codeword, mirroring ``_pq_codes``'s
-    array_min; empty codewords keep their centroid; ``tol`` early
-    exit), differing only in float summation order."""
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        ids: list = []
-        vecs: list = []
-        for pdf in batches:
-            ids.extend(pdf[id_col].tolist())
-            vecs.extend([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        order = np.argsort(np.asarray(ids), kind="stable")
-        x = np.vstack([vecs[i] for i in order])
-        subs = [x[:, j * dsub : (j + 1) * dsub] for j in range(m)]
-        books = [s[:ksub].copy() for s in subs]
-        for _ in range(iters):
-            moved = 0.0
-            new_books = []
-            for j in range(m):
-                s = subs[j]
-                b = books[j]
-                # pairwise L2^2; np.argmin ties to the smaller codeword
-                # id, matching _pq_codes' array_min struct ordering.
-                d2 = (
-                    (s * s).sum(axis=1)[:, None]
-                    - 2.0 * (s @ b.T)
-                    + (b * b).sum(axis=1)[None, :]
-                )
-                code = np.argmin(d2, axis=1)
-                nb = b.copy()
-                for c in range(ksub):
-                    members = s[code == c]
-                    if len(members):
-                        nb[c] = members.mean(axis=0)
-                moved = max(moved, float(np.max(np.abs(nb - b))))
-                new_books.append(nb)
-            books = new_books
-            if moved < tol:
-                break
-        yield pd.DataFrame(
-            {
-                "j": list(range(m)),
-                "book": [[c.tolist() for c in b] for b in books],
-            }
-        )
-
-    rows = (
-        train.coalesce(1)
-        .mapInPandas(run, schema="j long, book array<array<double>>")
-        .collect()
-    )
-    return [list(r["book"]) for r in sorted(rows, key=lambda r: r["j"])]
 
 
 def train_pq_with_cache(
@@ -835,129 +759,11 @@ def train_pq_with_cache(
     """:func:`train_pq`, but also returns the STILL-PERSISTED
     ``(id, vec)`` training projection for the caller's encode/ADC scan —
     same single-source-scan contract as :func:`train_kmeans_with_cache`;
-    the caller owns the unpersist. ``strategy`` as in
-    :func:`train_kmeans_with_cache`: auto trains single-task under the
-    ~30 MB element budget, distributed above it."""
-    if strategy not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown train_pq strategy {strategy!r}")
-    # Init collect doubles as the cache materialization (one source
-    # scan); _ensure_parallelism spreads the per-row encode work across
-    # cores when the source is under-split (no-op at lake scale).
-    train = _ensure_parallelism(df.select(id_col, vec_col)).persist()
-    first = train.orderBy(id_col).select(vec_col).limit(ksub).collect()
-    if len(first) < ksub:
-        raise ValueError(f"need at least ksub={ksub} vectors, found {len(first)}")
-    dim = len(first[0][0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books: list[list[list[float]]] = [
-        [[float(x) for x in r[0][j * dsub:(j + 1) * dsub]] for r in first]
-        for j in range(m)
-    ]
-    if strategy == "auto":
-        n_vec = train.count()
-        strategy = (
-            "local"
-            if n_vec * dim <= _KMEANS_SINGLE_TASK_ELEMENTS
-            else "distributed"
-        )
-    if strategy == "local":
-        return (
-            _pq_local_task(train, m, ksub, iters, id_col, vec_col, tol, dsub),
-            train,
-        )
-
-    # Distributed iteration = Arrow-batched PARTIAL SUMS per (subspace,
-    # codeword) — the same rewrite as train_kmeans_with_cache's loop
-    # (see the comment there; interleaved A/B on the strain set:
-    # 3.4 s -> 0.5 s per k-means iteration, same mechanism here): each
-    # task encodes its cached partition with one numpy d2 matrix per
-    # subspace (argmin ties to the SMALLER codeword, mirroring
-    # _pq_codes' array_min struct ordering) and emits m*ksub partial
-    # rows; a (j, code, dim) shuffle of partials combines them and the
-    # driver divides. Shuffle volume: m*ksub*partitions rows, not one
-    # row per vector element.
-    import numpy as np
-    import pandas as pd
-
-    for _ in range(iters):
-        books_np = [np.asarray(b, dtype=np.float64) for b in books]
-
-        def partials(batches, _b=books_np):
-            sums = np.zeros((m, ksub, dsub))
-            cnts = np.zeros((m, ksub), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):  # empty Arrow batch: vstack would raise
-                    continue
-                x = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                for j in range(m):
-                    s = x[:, j * dsub : (j + 1) * dsub]
-                    b = _b[j]
-                    d2 = (
-                        (s * s).sum(axis=1)[:, None]
-                        - 2.0 * (s @ b.T)
-                        + (b * b).sum(axis=1)[None, :]
-                    )
-                    code = np.argmin(d2, axis=1)
-                    for c in np.unique(code):
-                        mask = code == c
-                        sums[j, c] += s[mask].sum(axis=0)
-                        cnts[j, c] += int(mask.sum())
-            yield pd.DataFrame(
-                {
-                    "j": [j for j in range(m) for _ in range(ksub)],
-                    "code": [c for _ in range(m) for c in range(ksub)],
-                    "cnt": cnts.reshape(-1).tolist(),
-                    "s": [
-                        sums[j, c].tolist()
-                        for j in range(m)
-                        for c in range(ksub)
-                    ],
-                }
-            )
-
-        rows = (
-            train.mapInPandas(
-                partials, schema="j long, code long, cnt long, s array<double>"
-            )
-            .select("j", "code", "cnt", F.posexplode("s").alias("dim", "v"))
-            .groupBy("j", "code", "dim")
-            .agg(F.sum("v").alias("sv"), F.sum("cnt").alias("cn"))
-            .collect()
-        )
-        by_key: dict[tuple[int, int], dict[int, float]] = {}
-        cnt_by_key: dict[tuple[int, int], int] = {}
-        for r in rows:
-            by_key.setdefault((r["j"], r["code"]), {})[r["dim"]] = r["sv"]
-            cnt_by_key[(r["j"], r["code"])] = r["cn"]
-        new_books = [
-            [
-                [
-                    by_key[(j, c)][d] / cnt_by_key[(j, c)]
-                    for d in sorted(by_key[(j, c)])
-                ]
-                if cnt_by_key.get((j, c))
-                else books[j][c]
-                for c in range(ksub)
-            ]
-            for j in range(m)
-        ]
-        moved = max(
-            (
-                abs(a - b)
-                for ob, nb in zip(books, new_books)
-                for oc, nc in zip(ob, nb)
-                for a, b in zip(oc, nc)
-            ),
-            default=0.0,
-        )
-        books = new_books
-        if moved < tol:
-            break
-    return books, train
+    the caller owns the unpersist."""
+    books, train = _train_lloyd(
+        df, ksub, m, iters, id_col, vec_col, tol, strategy, _l2_codes
+    )
+    return books.tolist(), train
 
 
 def _pq_encode_arrow(
@@ -974,9 +780,7 @@ def _pq_encode_arrow(
 
     from pyspark.sql import types as T
 
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
+    books = np.asarray(codebooks, dtype=np.float64)
     base = df.select(id_col, vec_col)
     schema = T.StructType(
         list(base.schema.fields)
@@ -987,19 +791,7 @@ def _pq_encode_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                s = x[:, j * dsub : (j + 1) * dsub]
-                b = books[j]
-                d2 = (
-                    (s * s).sum(axis=1)[:, None]
-                    - 2.0 * (s @ b.T)
-                    + (b * b).sum(axis=1)[None, :]
-                )
-                codes[:, j] = np.argmin(d2, axis=1)
+            codes = _l2_codes(_stack_vectors(pdf, vec_col), books)
             out = pdf[[id_col, vec_col]].copy()
             out["__codes"] = [row.tolist() for row in codes]
             yield out

@@ -180,34 +180,43 @@ def test_connected_components_raises_when_unconverged(spark):
 def test_connected_components_strategies_and_dials_equivalent(spark):
     """All execution shapes must produce identical labels: the local
     single-task union-find (auto's pick for small graphs), the
-    distributed loop at probe_every 1 and 2, and the
-    reliable-checkpoint cluster regime — strategy/cadence/checkpoint
-    are performance/fault-tolerance knobs, never semantic ones."""
+    distributed loop, and its reliable-checkpoint cluster regime —
+    strategy and checkpoint regime are performance/fault-tolerance
+    knobs, never semantic ones."""
     from etl_tj_project_spark.operators.dedup import (
         connected_components,
         release_components,
     )
 
-    # two chains + an isolated pair: exercises multi-round convergence
-    edges = spark.createDataFrame(
+    graphs = [
+        # two chains + an isolated pair: multi-round convergence
         [(i, i + 1) for i in range(6)] + [(10, 11), (11, 12), (20, 21)],
-        ["doc_a", "doc_b"],
-    )
-    results = []
-    for kwargs in (
-        {"strategy": "local"},
-        {"strategy": "distributed", "probe_every": 1},
-        {"strategy": "distributed", "probe_every": 2},
-        {"strategy": "distributed", "reliable": True},
-    ):
-        labels = connected_components(edges, **kwargs)
-        results.append(sorted((r.node, r.component_id) for r in labels.collect()))
-        release_components(labels)
-    assert all(r == results[0] for r in results[1:])
-    comp = dict(results[0])
+        # a long chain (many doubling rounds) + a triangle + a pair
+        [(i, i + 1) for i in range(1, 60)]
+        + [(200, 201), (201, 202), (200, 202), (500, 999)],
+    ]
+    firsts = []
+    for graph in graphs:
+        edges = spark.createDataFrame(graph, "doc_a long, doc_b long")
+        results = []
+        for kwargs in (
+            {"strategy": "local"},
+            {"strategy": "distributed"},
+            {"strategy": "distributed", "reliable": True},
+        ):
+            labels = connected_components(edges, **kwargs)
+            results.append(
+                sorted((r.node, r.component_id) for r in labels.collect())
+            )
+            release_components(labels)
+        assert all(r == results[0] for r in results[1:])
+        firsts.append(dict(results[0]))
+    comp, chain = firsts
     assert comp[5] == 0 and comp[12] == 10 and comp[21] == 20
+    assert chain[60] == 1 and chain[202] == 200 and chain[999] == 500
+    assert len(set(chain.values())) == 3
     with pytest.raises(ValueError, match="strategy"):
-        connected_components(edges, strategy="bogus")
+        connected_components(edges, strategy="star")
 
 
 def test_connected_components_releases_all_caches(spark):

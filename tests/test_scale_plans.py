@@ -400,25 +400,60 @@ def test_jdbc_upsert_merge_on_derby(spark, tmp_path):
     assert got == [(1, "new-1"), (2, "new-2"), (3, "keep-3"), (9, "ins-9")]
 
 
+_CLUSTER_ANCHORS = [[10.0, 0.0, 0.0], [0.0, 10.0, 0.0], [0.0, 0.0, 10.0]]
+_PQ_ANCHORS = [(-5.0, -5.0), (5.0, 5.0)]
+
+
+def _planted_cluster_rows():
+    """90 vectors in three tight clusters around _CLUSTER_ANCHORS."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for a in _CLUSTER_ANCHORS:
+        for _ in range(30):
+            rows.append((len(rows), [x + rng.uniform(-0.5, 0.5) for x in a]))
+    return rows
+
+
+def _planted_pq_rows():
+    """Planted structure per subspace: dim=8, m=4 subspaces of 2 dims,
+    each vector's subspace slice drawn near one of _PQ_ANCHORS."""
+    import random
+
+    rng = random.Random(11)
+    rows = []
+    for vid in range(60):
+        vec = []
+        for _ in range(4):
+            ax, ay = _PQ_ANCHORS[rng.randint(0, 1)]
+            vec += [ax + rng.uniform(-0.3, 0.3), ay + rng.uniform(-0.3, 0.3)]
+        rows.append((vid, vec))
+    return rows
+
+
+def _duplicate_rows():
+    """12 identical vectors: every assignment is a tie."""
+    return [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(12)]
+
+
+def _tie_rows():
+    """[1, 1] is exactly as close to init [1, 0] as to init [0, 1]
+    under cosine AND under L2, so the tie rules decide its cell."""
+    return [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]),
+            (3, [1.0, 1.0]), (4, [2.0, 1.0])]
+
+
 def test_kmeans_recovers_planted_clusters(spark):
     """Lloyd training on three tight planted clusters must converge to
     the cluster means and assign every vector to its own cluster."""
-    import random
-
     from etl_tj_project_spark.operators.similarity import (
         _cell_expr,
         train_kmeans,
     )
 
-    rng = random.Random(7)
-    anchors = [[10.0, 0.0, 0.0], [0.0, 10.0, 0.0], [0.0, 0.0, 10.0]]
-    rows = []
-    vid = 0
-    for a in anchors:
-        for _ in range(30):
-            rows.append((vid, [x + rng.uniform(-0.5, 0.5) for x in a]))
-            vid += 1
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    anchors = _CLUSTER_ANCHORS
+    df = spark.createDataFrame(_planted_cluster_rows(), ["vec_id", "embedding"])
 
     # Both execution shapes must converge: the single-task numpy path
     # (auto's pick at this size) and the distributed per-iteration
@@ -461,22 +496,10 @@ def test_pq_strategies_agree_and_distributed_stays_exercised(spark):
     only in float summation order — codebooks must agree within float
     tolerance, and a planted-structure check pins that the DISTRIBUTED
     loop itself converges to the planted subspace codewords."""
-    import random
-
     from etl_tj_project_spark.operators.similarity import train_pq
 
-    # Planted structure per subspace: dim=8, m=4 subspaces of 2 dims,
-    # each vector's subspace slice drawn near one of 2 anchors.
-    rng = random.Random(11)
-    anchors = [(-5.0, -5.0), (5.0, 5.0)]
-    rows = []
-    for vid in range(60):
-        vec = []
-        for _ in range(4):
-            ax, ay = anchors[rng.randint(0, 1)]
-            vec += [ax + rng.uniform(-0.3, 0.3), ay + rng.uniform(-0.3, 0.3)]
-        rows.append((vid, vec))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    anchors = _PQ_ANCHORS
+    df = spark.createDataFrame(_planted_pq_rows(), ["vec_id", "embedding"])
 
     books = {}
     for strategy in ("local", "distributed"):
@@ -568,8 +591,9 @@ def test_distributed_trainers_empty_cells_and_empty_partitions(spark):
         train_pq,
     )
 
-    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(12)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(32)
+    df = spark.createDataFrame(
+        _duplicate_rows(), ["vec_id", "embedding"]
+    ).repartition(32)
     for strategy in ("local", "distributed"):
         cents = train_kmeans(df, k=2, iters=3, strategy=strategy)
         # All rows tie on cosine -> assigned to the LARGER cell id;
@@ -585,6 +609,74 @@ def test_distributed_trainers_empty_cells_and_empty_partitions(spark):
             want = [1.0, 2.0] if j == 0 else [3.0, 4.0]
             assert book[0] == pytest.approx(want), (strategy, j)
             assert book[1] == pytest.approx(want), (strategy, j)
+
+
+def _reference_lloyd(rows, k, m, iters, tol, rule):
+    """Plain NumPy Lloyd: init = first k rows by id; per subspace assign
+    by cosine argmax (ties to the larger cell) or L2 argmin (ties to the
+    smaller codeword); new centroid = member mean, empty cells keep
+    theirs; stop once no coordinate moves by ``tol``."""
+    import numpy as np
+
+    x = np.vstack([np.asarray(v, dtype=np.float64) for _, v in sorted(rows)])
+    dsub = x.shape[1] // m
+    subs = [x[:, j * dsub : (j + 1) * dsub] for j in range(m)]
+    books = [s[:k].copy() for s in subs]
+    for _ in range(iters):
+        moved, new_books = 0.0, []
+        for s, b in zip(subs, books):
+            if rule == "cosine":
+                denom = np.outer(
+                    np.linalg.norm(s, axis=1), np.linalg.norm(b, axis=1)
+                )
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    scores = np.where(denom > 0, (s @ b.T) / denom, -np.inf)
+                code = k - 1 - np.argmax(scores[:, ::-1], axis=1)
+            else:
+                d2 = (
+                    (s * s).sum(axis=1)[:, None]
+                    - 2.0 * (s @ b.T)
+                    + (b * b).sum(axis=1)[None, :]
+                )
+                code = np.argmin(d2, axis=1)
+            nb = b.copy()
+            for c in range(k):
+                if (code == c).any():
+                    nb[c] = s[code == c].mean(axis=0)
+            moved = max(moved, float(np.max(np.abs(nb - b))))
+            new_books.append(nb)
+        books = new_books
+        if moved < tol:
+            break
+    return [b.tolist() for b in books]
+
+
+def test_local_trainers_equal_numpy_reference_lloyd(spark):
+    """The single-task trainers must reproduce a plain NumPy Lloyd
+    EXACTLY (``==``, not a tolerance): the strategy-agreement tests only
+    bound drift to 1e-6, so an update-rule change (init, tie rule,
+    empty-cell rule, early exit) would otherwise pass unseen."""
+    from etl_tj_project_spark.operators.similarity import (
+        train_kmeans,
+        train_pq,
+    )
+
+    cases = [
+        (_planted_cluster_rows(), 3, 1, 5, "cosine"),
+        (_duplicate_rows(), 2, 1, 3, "cosine"),
+        (_planted_pq_rows(), 2, 4, 6, "l2"),
+        (_duplicate_rows(), 2, 2, 3, "l2"),
+        (_tie_rows(), 2, 1, 3, "cosine"),
+        (_tie_rows(), 2, 1, 3, "l2"),
+    ]
+    for rows, k, m, iters, rule in cases:
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(7)
+        want = _reference_lloyd(rows, k, m, iters, 1e-4, rule)
+        if rule == "cosine":
+            got = [train_kmeans(df, k=k, iters=iters, strategy="local")]
+        else:
+            got = train_pq(df, m=m, ksub=k, iters=iters, strategy="local")
+        assert got == want, (rule, k, m)
 
 
 def test_chunked_running_sum_equals_naive_window_on_adversarial_data(spark):

@@ -130,28 +130,6 @@ def test_u2_cold_io_strain_runs_and_variants_agree(spark):
     assert isinstance(out["throttle_applied"], bool)
 
 
-def test_star_cc_strategy_matches_local(spark):
-    """Large-star/small-star (strategy='star', the VERDICT r8 item-5
-    A/B alternative) must produce identical labels to the pinned
-    single-task strategy on the LSH graph AND on an adversarial
-    chain+clique graph (chains need many folds, cliques one)."""
-    from etl_tj_project_spark.operators import dedup as dd
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 60)]
-        + [(200, 201), (201, 202), (200, 202), (500, 999)],
-        "doc_a long, doc_b long",
-    )
-    star = dd.connected_components(edges, "doc_a", "doc_b", strategy="star")
-    loc = dd.connected_components(edges, "doc_a", "doc_b", strategy="local")
-    a = {t["node"]: t["component_id"] for t in star.collect()}
-    b = {t["node"]: t["component_id"] for t in loc.collect()}
-    assert a == b
-    assert len(set(a.values())) == 3
-    dd.release_components(star)
-    dd.release_components(loc)
-
-
 def test_paragraph_dedup_under_replica_skew(spark):
     """dedup_paragraph_chunks under boilerplate skew (round 9): a
     corpus where every document is replicated 5x (the lsh_skew shape)
