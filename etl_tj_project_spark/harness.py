@@ -15,6 +15,10 @@ runs on DuckDB views named after the tables.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -1611,113 +1615,52 @@ from etl_tj_project_spark import harness_r16  # noqa: E402,F401
 from etl_tj_project_spark import parity  # noqa: E402
 
 
-# The driver runs CORRECTNESS on the FIRST 50 registry entries only, in
-# iteration order — so iteration order is the coverage lever. The
-# steady-state regime (reached r9): each window is (a) the four-entry
-# §2 stability core, (b) oracle-backed entries with NO driver green yet
-# (newest additions / post-window landings), then (c) the oracle-backed
-# entries whose LAST driver green is OLDEST, oldest cohort first in its
-# original window order. Window composition rationale recorded in
-# COVERAGE.md per round.
-#
-# WINDOW_ROUND pins WHICH CORRECTNESS ledger this window was composed
-# against: the window below was computed from CORRECTNESS_r01..r16 and
-# is the round-17 submission. tests/test_oracle_parity.py's rotation
-# test must ignore CORRECTNESS files >= this round — otherwise the
-# moment the driver lands the NEXT record the test demands a window
-# that can't exist yet (the r9 failure mode, VERDICT r9 item 1b) —
-# and must equal the newest recorded round (record just landed,
-# recomposition pending) or that + 1 (recomposed — the steady state);
-# a missed bump fails loudly instead of silently pinning a stale
-# window (ADVICE r10/r11).
-WINDOW_ROUND = 18
-# Scheduled rows-only refresh, third and FINAL installment (VERDICT
-# r15 item 4; r16/r17 took the first two pairs): the last two r7-era
-# rows-only entries, `theta_audience_overlap` and
-# `kll_quantile_merge_profile`, take the r18 slots exactly as the r17
-# window comment scheduled. After this round every rows-only sketch/
-# trained-ANN entry has a post-r7 driver `spark_rows > 0` record and
-# the rows-only bar returns (ROWS_ONLY_REFRESH empties in r19).
-# tests/test_oracle_parity.py pins that rows-only window slots are
-# EXACTLY this list and never more than 4.
-ROWS_ONLY_REFRESH: list[str] = [
-    "theta_audience_overlap",
-    "kll_quantile_merge_profile",
-]
-DRIVER_WINDOW: list[str] = [
-    # (b) never-attested: NONE — round 18 is an optimization round and
-    # registers no new entries.
-    # (a) §2 stability core (driver-green every round they ran, r2-r17)
-    "p1_typed_projection",
-    "j1_inner_join_fanout",
-    "a1_agg_by_card",
-    "u2_two_branch_union_agg",
-    # Scheduled rows-only refresh slots (see ROWS_ONLY_REFRESH above).
-    "theta_audience_overlap",
-    "kll_quantile_merge_profile",
-    # (c) oldest-green rotation, computed from CORRECTNESS_r01..r17:
-    # first the two r11-cohort entries deferred by the r17 window
-    # (newest green r11 — the stalest pair, window-mandated in full),
-    "corpus_mixture_plan",
-    "posexplode_tokens",
-    # then 42 of the 46-entry r12 cohort (newest green r12) in its
-    # CORRECTNESS_r12 record order; the cohort exceeds the remaining
-    # 42-slot capacity, so its LAST FOUR record-order entries
-    # (assoc_rules_support_lift, interval_prorate_weekly,
-    # winsorize_price_p05_p95, running_max_drawdown) are deferred to
-    # r19, where as part of the then-stalest cohort they are
-    # window-mandated.
-    "gdpr_delete_roundtrip",
-    "merge_sorted_export_roundtrip",
-    "quality_ranked_quota_sample",
-    "ngram_dup_rate_curve",
-    "khop_reachability",
-    "contrastive_negative_sampling",
-    "timezone_dst_pack",
-    "regexp_extract_all_numbers",
-    "text_corpus_stopword_fraction",
-    "text_unigram_commonness",
-    "doc_length_percentile_band",
-    "embedding_q8_norm_profile",
-    "graph_degree_distribution",
-    "graph_triangle_count",
-    "dedup_semantic_semdedup",
-    "minhash_accuracy_audit",
-    "embedding_pca_power_fixedpoint",
-    "embedding_random_projection_16",
-    "ann_projected_rerank_topk",
-    "text_bigram_coverage",
-    "ann_filtered_topk_per_label",
-    "lang_label_confusion_matrix",
-    "text_zipf_head_share",
-    "bitwise_agg_pack",
-    "median_iqr_pack",
-    "mode_top1_per_group",
-    "moving_agg_rows_frame",
-    "running_distinct_count",
-    "approx_distinct_kmv",
-    "bpe_learned_merges",
-    "full_outer_reconcile",
-    "not_in_null_semantics",
-    "variant_json_extract",
-    "try_arithmetic_pack",
-    "yoy_growth_accounts",
-    "wau_rolling_distinct",
-    "skewed_distinct_two_phase",
-    "cms_heavy_hitters",
-    "spearman_rank_corr",
-    "impute_group_mean",
-    "rebase_index_100",
-    "vocab_jaccard_sources",
-]
+# The driver hash-checks only the first 50 entries, recording the result
+# in CORRECTNESS_r<N>.json; driver_window() picks them from that ledger
+# (COVERAGE.md, "Driver window rule"). REATTEST: name rewritten since its
+# last green -> first round whose green counts; it expires by itself.
+REATTEST: dict[str, int] = {
+    "dedup_prefix_filter_jaccard": 19,
+    "dedup_containment_ngram": 19,
+    "decontaminate_13gram": 19,
+}
+
+
+def driver_window(ledger_dir: str | None = None) -> list[str]:
+    """The 50 oracle-backed names the driver checks next: the stability
+    core, entries never green in the ledger (registration order),
+    pending REATTEST names, then the rest oldest green first (by round,
+    then position in that round's record). ``ledger_dir`` defaults to
+    the repo root and exists for tests."""
+    ledger_dir = ledger_dir or os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
+    newest: dict[str, tuple[int, int]] = {}  # name -> (round, position)
+    for path in glob.glob(os.path.join(ledger_dir, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for pos, (name, row) in enumerate(json.load(fh).items()):
+                if row.get("err") is None and row.get("rows_match"):
+                    newest[name] = max(newest.get(name, (0, 0)), (rnd, pos))
+    backed = dict.fromkeys(
+        n for n, e in REGISTRY.items() if e.oracle is not None
+    )
+    order = [
+        "p1_typed_projection",
+        "j1_inner_join_fanout",
+        "a1_agg_by_card",
+        "u2_two_branch_union_agg",
+        *(n for n in backed if n not in newest),
+        *(n for n, rnd in REATTEST.items() if newest.get(n, (0, 0))[0] < rnd),
+        *sorted((n for n in backed if n in newest), key=newest.__getitem__),
+    ]
+    return list(dict.fromkeys(n for n in order if n in backed))[:50]
 
 
 def ordered_registry() -> dict[str, Entry]:
-    """REGISTRY with DRIVER_WINDOW entries first, the rest after in
+    """REGISTRY with driver_window() entries first, the rest after in
     registration order."""
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    assert not missing, f"DRIVER_WINDOW names not registered: {missing}"
-    windowed = {n: REGISTRY[n] for n in DRIVER_WINDOW}
+    windowed = {n: REGISTRY[n] for n in driver_window()}
     windowed.update((n, e) for n, e in REGISTRY.items() if n not in windowed)
     return windowed
 

@@ -1341,6 +1341,9 @@ def prefix_filter_jaccard_pairs(
     verify stage from 3.27 s to 0.39 s at sf0.1 with bit-identical
     output (tier rationale above _VERIFY_BITSET_MAX_TERMS).
 
+    Construction is not lazy: it runs one eager count job
+    (``_count_once(dfreq)``, the vocabulary size) to pick the verify tier.
+
     At 100 TB: one token-distinct shuffle, one df aggregation, one
     (doc)-keyed window for prefix ranks, one term-keyed candidate
     self-join (length+positional pruned), two id-keyed array joins for
@@ -1642,7 +1645,9 @@ def containment_candidate_pairs(
     :func:`prefix_filter_containment_pairs` alone — what the exact
     verify stage would have to process. The guardrail strain counts
     this on raw vs canonicalized corpora to show canonicalize-first
-    shrinks the verify input, not just the final output."""
+    shrinks the verify input, not just the final output. Construction
+    runs one eager count job (``_count_once(dfreq)`` in
+    :func:`_containment_candidate_stages`) to pick the verify tier."""
     _, _, cand, _ = _containment_candidate_stages(
         df, id_col, text_col, ngram, t_num, t_den
     )
@@ -1684,6 +1689,9 @@ def prefix_filter_containment_pairs(
     bounded per RARE term), two id-keyed joins for exact verification.
     Output pairs are ordered (doc_a = the contained side), both
     directions emitted independently.
+
+    Construction runs one eager count job (``_count_once(dfreq)`` in
+    :func:`_containment_candidate_stages`) to pick the verify tier.
     """
     toks, sizes, cand, n_vocab = _containment_candidate_stages(
         df, id_col, text_col, ngram, t_num, t_den

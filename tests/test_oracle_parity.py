@@ -62,116 +62,102 @@ def test_query_matches_oracle(spark, duck, name, pinned_pairs):
 
 
 def test_driver_window_is_first_50():
+    window = harness.driver_window()
     ordered = list(harness.ordered_registry())
-    assert ordered[:50] == harness.DRIVER_WINDOW
-    assert len(harness.DRIVER_WINDOW) == 50
+    assert ordered[:50] == window
+    assert len(window) == 50
     assert set(ordered) == set(harness.REGISTRY)
+    assert all(harness.REGISTRY[n].oracle for n in harness.REATTEST)
 
 
-def test_driver_window_has_no_rows_only_slots():
-    """Round-5 lesson: a window slot burned on err=no_oracle proves
-    nothing, so rows-only entries are barred from the window — EXCEPT
-    during a declared, bounded refresh (the round-7 precedent, repeated
-    r16-r17 per VERDICT r15 item 4: the 7 rows-only sketch/trained-ANN
-    entries' last driver `spark_rows > 0` rows dated to round 7, three
-    driver eras old). The exception is pinned, not open-ended: the
-    window's rows-only slots must be EXACTLY harness.ROWS_ONLY_REFRESH
-    (at most 4 — the free-slot budget after the mandated stalest cohort
-    and never-attested entries), and every refresh name must really be
-    a rows-only registry entry."""
-    rows_only = {
-        n for n in harness.DRIVER_WINDOW if harness.REGISTRY[n].oracle is None
-    }
-    declared = set(harness.ROWS_ONLY_REFRESH)
-    assert len(declared) <= 4, (
-        f"rows-only refresh exceeds its slot budget: {sorted(declared)}"
-    )
-    assert all(
-        harness.REGISTRY[n].oracle is None for n in declared
-    ), "ROWS_ONLY_REFRESH names an oracle-backed entry"
-    assert rows_only == declared, (
-        f"window rows-only slots != declared refresh: "
-        f"window={sorted(rows_only)} declared={sorted(declared)}"
-    )
+_CORE = [
+    "p1_typed_projection",
+    "j1_inner_join_fanout",
+    "a1_agg_by_card",
+    "u2_two_branch_union_agg",
+]
 
 
-def test_driver_window_is_oldest_green_first():
-    """The rotation's point (VERDICT r7 item 2): beyond the stability
-    core and this round's changed entries, window slots go to the
-    entries whose last driver green is OLDEST. Computed DYNAMICALLY
-    from the CORRECTNESS_r*.json files that existed when the window was
-    composed — rounds < harness.WINDOW_ROUND. Records from
-    WINDOW_ROUND onward are IGNORED: the driver lands CORRECTNESS_r{N}
-    after the builder's last commit of round N, so a test reading every
-    file demands the round-(N+1) window before round N+1 exists and
-    fails at the start of every round (the r9 failure mode, VERDICT r9
-    item 1b). The window is pinned to its composition ledger instead."""
-    import glob
+def test_driver_window_rule_on_synthetic_ledger(tmp_path, monkeypatch):
+    """The window rule on a three-round ledger: core, never-green in
+    registration order, pending re-attests, then oldest green by
+    (round, record position); rows-only entries never get a slot."""
     import json
-    import os
-    import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    newest: dict[str, int] = {}
-    recorded_rounds: set[int] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        recorded_rounds.add(rnd)
-        if rnd >= harness.WINDOW_ROUND:
-            continue
-        with open(path) as fh:
-            rec = json.load(fh)
-        for name, row in rec.items():
-            if row.get("err") is None and row.get("rows_match"):
-                newest[name] = max(newest.get(name, 0), rnd)
-    if not newest:
-        pytest.skip("no CORRECTNESS records present")
-    # WINDOW_ROUND is bumped by hand each round; a missed bump (or a
-    # bump without recomposition) would make this test silently
-    # validate against a STALE ledger and pass while rotation coverage
-    # stalls — the inverse of the r9 failure mode it fixes (ADVICE
-    # r10). Pin the invariant loosely enough to survive the landing of
-    # the current round's own ledger file (ADVICE r11: the strict
-    # `== max + 1` form failed the suite the moment the driver wrote
-    # CORRECTNESS_r{N}.json, re-creating the r9 between-rounds redness
-    # it was meant to replace): WINDOW_ROUND may equal the newest
-    # recorded round + 1 (recomposed against the full ledger — the
-    # steady state) or the newest recorded round itself (this round's
-    # record just landed; recomposition is the next round's first
-    # commit). Anything older is a stalled rotation and fails.
-    assert harness.WINDOW_ROUND in (
-        max(recorded_rounds),
-        max(recorded_rounds) + 1,
-    ), (
-        f"WINDOW_ROUND={harness.WINDOW_ROUND} but newest recorded "
-        f"CORRECTNESS round is r{max(recorded_rounds)}: recompose "
-        f"DRIVER_WINDOW against the full ledger and bump WINDOW_ROUND "
-        f"to {max(recorded_rounds) + 1}"
+    cohort = [f"c{i:02d}" for i in range(60)]
+    names = _CORE + ["never_a", "redone_old", "redone_done", "never_b",
+                     "stale_x", "stale_y", "rows_only", *reversed(cohort)]
+    registry = {n: harness.Entry(spark=None, oracle="SELECT 1") for n in names}
+    registry["rows_only"].oracle = None
+    monkeypatch.setattr(harness, "REGISTRY", registry)
+    monkeypatch.setattr(
+        harness,
+        "REATTEST",
+        {"redone_old": 3, "rows_only": 3, "redone_done": 3},
     )
-    # Oracle-backed entries only (rows-only slots are barred above) and
-    # only names still in the registry.
-    stale_pool = {
-        n: r
-        for n, r in newest.items()
-        if n in harness.REGISTRY and harness.REGISTRY[n].oracle is not None
+
+    def green(**kw):
+        return {"rows_match": True, "err": None, **kw}
+
+    rounds = {
+        1: {**{n: green() for n in _CORE}, "redone_old": green(),
+            "redone_done": green(), "stale_y": green(), "stale_x": green()},
+        # A red row (err set, or rows_match False) is not a green.
+        2: {"never_a": green(err="boom"), "never_b": green(rows_match=False),
+            "rows_only": green(),
+            **{n: green() for n in cohort[:30]}},
+        3: {**{n: green() for n in cohort[30:]}, "redone_done": green()},
     }
-    oldest_round = min(stale_pool.values())
-    stalest = {n for n, r in stale_pool.items() if r == oldest_round}
-    missing = stalest - set(harness.DRIVER_WINDOW)
-    # The stalest cohort can exceed the non-core window capacity (e.g.
-    # 40+ entries sharing one round); then the window must spend every
-    # non-core, non-changed slot on it. With 50 slots and <=6 reserved,
-    # 44 is the capacity floor.
-    if len(stalest) <= 44:
-        assert not missing, (
-            f"entries with oldest green r{oldest_round} missing from "
-            f"window: {sorted(missing)}"
-        )
-    else:
-        assert len(stalest & set(harness.DRIVER_WINDOW)) >= 44
+    for rnd, rec in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rec))
+
+    window = harness.driver_window(str(tmp_path))
+    assert len(window) == 50
+    assert window[:4] == _CORE
+    assert window[4:6] == ["never_a", "never_b"]
+    # redone_old's newest green (r1) is below its round: it is placed;
+    # redone_done has a green at r3 and falls back into the rotation.
+    assert window[6] == "redone_old"
+    assert "rows_only" not in window
+    # Rotation: the r1 greens first, then r2 (record order, not
+    # registration order), then r3, cut at 50.
+    assert window[7:] == ["stale_y", "stale_x", *cohort[:41]]
+
+    # Once the ledger shows redone_old green at its round, the
+    # re-attest slot expires by itself.
+    (tmp_path / "CORRECTNESS_r04.json").write_text(
+        json.dumps({"redone_old": green()})
+    )
+    assert "redone_old" not in harness.driver_window(str(tmp_path))
+
+
+def test_driver_window_on_committed_ledger(tmp_path, monkeypatch):
+    """The r19 window from the committed CORRECTNESS_r01..r18 ledger:
+    the core, the three re-attests, the four r12-cohort entries the r18
+    window deferred, then 39 of the r13 cohort in its record order.
+    Later records and REATTEST edits change the live window, not this."""
+    import json
+    import shutil
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    for rnd in range(1, 19):
+        shutil.copy(root / f"CORRECTNESS_r{rnd:02d}.json", tmp_path)
+    monkeypatch.setattr(harness, "REATTEST", {
+        "dedup_prefix_filter_jaccard": 19,
+        "dedup_containment_ngram": 19,
+        "decontaminate_13gram": 19,
+    })
+    window = harness.driver_window(str(tmp_path))
+    assert window[:11] == _CORE + list(harness.REATTEST) + [
+        "assoc_rules_support_lift",
+        "interval_prorate_weekly",
+        "winsorize_price_p05_p95",
+        "running_max_drawdown",
+    ]
+    r13 = json.loads((root / "CORRECTNESS_r13.json").read_text())
+    assert window[11:] == [n for n in r13 if n in window[11:]]
+    assert len(window[11:]) == 39
 
 
 def test_canonicalizer_rejects_array_cells():
@@ -456,37 +442,3 @@ def test_partition_checksum_detects_single_row_change(spark):
         .count()
     )
     assert diff == 1
-
-
-def test_driver_window_leads_with_never_attested_entries():
-    """Rule (b) of the window policy, pinned (round 15 — the other
-    half of the r13/r14 register-after-proof slip): every oracle-backed
-    registry entry with NO driver CORRECTNESS row in any round before
-    WINDOW_ROUND must occupy a window slot, or it can never receive its
-    first attestation. The replay tripwire (test_driver_contract)
-    guards the committed replay log; this guards the window
-    composition itself."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    attested: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        import re
-
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
-        if rnd >= harness.WINDOW_ROUND:
-            continue
-        with open(path) as fh:
-            attested.update(json.load(fh).keys())
-    never = {
-        n
-        for n, e in harness.REGISTRY.items()
-        if e.oracle is not None and n not in attested
-    }
-    missing = never - set(harness.DRIVER_WINDOW)
-    assert not missing, (
-        f"never-attested entries absent from DRIVER_WINDOW (they can "
-        f"never get their first driver row): {sorted(missing)}"
-    )
