@@ -160,6 +160,43 @@ def test_driver_window_on_committed_ledger(tmp_path, monkeypatch):
     assert len(window[11:]) == 39
 
 
+def test_driver_window_has_no_rows_only_slots(monkeypatch):
+    """A window slot spent on a rows-only entry (err=no_oracle) proves
+    nothing, so the live window holds oracle-backed entries only — and
+    a rows-only entry stays out even when it has never been green and
+    is named in REATTEST, the two steps that otherwise jump the queue."""
+    window = harness.driver_window()
+    assert window
+    assert all(harness.REGISTRY[n].oracle is not None for n in window)
+
+    registry = dict(harness.REGISTRY)
+    registry["rows_only_new"] = harness.Entry(spark=None, oracle=None)
+    monkeypatch.setattr(harness, "REGISTRY", registry)
+    monkeypatch.setattr(
+        harness, "REATTEST", {**harness.REATTEST, "rows_only_new": 99}
+    )
+    assert "rows_only_new" not in harness.driver_window()
+
+
+def test_driver_window_leads_with_never_attested_entries(monkeypatch):
+    """Entries registered after the newest ledger record have no green
+    yet; on the committed ledger they take the slots right after the
+    stability core, in registration order, ahead of the REATTEST names
+    and the oldest-green rotation."""
+    registry = dict(harness.REGISTRY)
+    fresh = ["zz_new_second", "aa_new_first"]
+    for n in fresh:
+        registry[n] = harness.Entry(spark=None, oracle="SELECT 1")
+    monkeypatch.setattr(harness, "REGISTRY", registry)
+
+    window = harness.driver_window()
+    assert window[:4] == _CORE
+    assert window[4:6] == fresh
+    pending = [n for n in window[6:] if n in harness.REATTEST]
+    assert window[6:6 + len(pending)] == pending
+    assert len(window) == 50
+
+
 def test_canonicalizer_rejects_array_cells():
     """Regression for the r4 array_agg_sorted driver crash: a raw array
     column must be REJECTED by the local gate (the driver's pandas
