@@ -410,19 +410,7 @@ def decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.greatest(
-                                F.size(toks) - F.lit(12), F.lit(1)
-                            ),
-                        ),
-                        lambda i: F.array_join(
-                            F.slice(toks, i, 13), " "
-                        ),
-                    )
-                )
+                F.array_distinct(tx.word_shingles(F.lower("text"), k=13))
             ).alias("s"),
         )
         .distinct()
@@ -497,8 +485,6 @@ def decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_paragraph_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.split(F.col("text"), " ")
-    n_chunks = F.ceil(F.size(ws) / F.lit(12.0)).cast("int")
     # (r17 A/B: spread/persist variants LOST here — plain 1.08 s vs
     # spread 1.79 s vs spread+persist 1.86 s interleaved at sf0.1: the
     # 12-word chunk slicing is cheap relative to a keyless repartition
@@ -507,14 +493,9 @@ def dedup_paragraph_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = (
         d.select(
             "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), n_chunks - 1),
-                    lambda i: F.array_join(
-                        F.slice(ws, i * 12 + 1, 12), " "
-                    ),
-                )
-            ).alias("chunk_idx", "chunk_text"),
+            F.posexplode(tx.word_chunks("text", 12)).alias(
+                "chunk_idx", "chunk_text"
+            ),
         )
         .select(
             "doc_id",

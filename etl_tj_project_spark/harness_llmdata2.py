@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.functions import text as tx
 from etl_tj_project_spark.harness import register
 from etl_tj_project_spark.sources.testdata import load_table
 
@@ -530,11 +531,12 @@ def char_trigram_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode(
             F.when(F.length(s) < 3, F.array()).otherwise(
-                F.expr(
-                    "transform(sequence(1, length("
-                    "regexp_replace(lower(text), '[^a-z0-9 ]', '')) - 2), "
-                    "i -> substring("
-                    "regexp_replace(lower(text), '[^a-z0-9 ]', ''), i, 3))"
+                tx.let(
+                    s,
+                    lambda t: F.transform(
+                        F.sequence(F.lit(1), F.length(t) - 2),
+                        lambda i: t.substr(i, F.lit(3)),
+                    ),
                 )
             )
         ).alias("g"),

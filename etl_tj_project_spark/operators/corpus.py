@@ -172,8 +172,6 @@ def boilerplate_chunk_stats(
     only as the kept-chunk payload (single source of truth for the
     ``boilerplate_chunk_removal`` registry entry and the corpus
     pipeline's optional boilerplate stage)."""
-    ws = F.split(F.col(text_col), " ")
-    n_chunks = F.ceil(F.size(ws) / F.lit(float(chunk_words))).cast("int")
     # (r17 A/B: spread/persist variants of this chunk explode LOST at
     # sf0.1 — plain 1.08 s vs spread 1.79 s vs spread+persist 1.86 s on
     # the paragraph twin: 12-word slicing is cheap relative to the
@@ -182,14 +180,9 @@ def boilerplate_chunk_stats(
     # chunk payload. Left as-is deliberately.)
     chunks = df.select(
         id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_chunks - 1),
-                lambda i: F.array_join(
-                    F.slice(ws, i * chunk_words + 1, chunk_words), " "
-                ),
-            )
-        ).alias("chunk_idx", "chunk_text"),
+        F.posexplode(tx.word_chunks(text_col, chunk_words)).alias(
+            "chunk_idx", "chunk_text"
+        ),
     ).select(
         id_col,
         F.col("chunk_idx").cast("long").alias("chunk_idx"),

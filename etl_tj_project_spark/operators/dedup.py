@@ -1536,30 +1536,7 @@ def _containment_candidate_stages(
     (strain.py) can count the candidate-join input the verify stage
     would have to pay for, without duplicating the pipeline or running
     the verify."""
-    sh = F.array_distinct(
-        F.when(
-            F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(
-                        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-                        - F.lit(ngram - 1),
-                        F.lit(1),
-                    ),
-                ),
-                lambda i: F.array_join(
-                    F.slice(
-                        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                        i,
-                        ngram,
-                    ),
-                    " ",
-                ),
-            )
-        )
-    )
+    sh = F.array_distinct(word_shingles(F.lower(F.col(text_col)), k=ngram))
     # The postings frame feeds SIX consumers (df counts, sizes, ranks,
     # the candidate B side, both verify sides); without a persist each
     # re-runs the split+shingle explode over the corpus. Measured at

@@ -19,6 +19,7 @@ a constant number of renames regardless of data size.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -163,7 +164,16 @@ def build_training_corpus(
         tables["quarantine"] = quarantine
     if dedup_manifest is not None:
         tables["dedup_manifest"] = dedup_manifest
-    version = manifest.commit(out_root, tables)
+    # ``split_stats`` aggregates ``final``: unpersisted, the commit ran
+    # the quality -> language -> exact -> LSH -> Jaccard lineage twice
+    # (once per table). Cached, the corpus write materializes the spine
+    # once (the Observation fires in that job only) and split_stats
+    # reads the cache. Released on every path out of the commit.
+    final.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        version = manifest.commit(out_root, tables)
+    finally:
+        final.unpersist()
 
     published = manifest.read_table(spark, out_root, "corpus")
     n_out = published.count()

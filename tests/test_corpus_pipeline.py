@@ -4,8 +4,13 @@ invariants a production pipeline is graded on."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from etl_tj_project_spark import manifest
 from etl_tj_project_spark.plans.corpus_pipeline import build_training_corpus
@@ -64,6 +69,100 @@ def test_pipeline_publishes_curated_snapshot(spark, jsonl_shards, tmp_path):
         stats_tbl.agg(F.sum("n_docs")).collect()[0][0]
         == stats["n_published"]
     )
+
+
+def _spy_persist(spark, monkeypatch) -> list:
+    """Record every frame persisted while the patch is live."""
+    cls = type(spark.range(1))
+    real = cls.persist
+    seen: list = []
+
+    def persist(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", persist)
+    return seen
+
+
+def _spine(persisted: list):
+    spines = [df for df in persisted if "split" in df.columns]
+    assert len(spines) == 1, [df.columns for df in persisted]
+    return spines[0]
+
+
+def test_pipeline_commit_reads_input_once(
+    spark, jsonl_shards, tmp_path, monkeypatch
+):
+    """split_stats aggregates the persisted spine: during the commit the
+    JSONL input is scanned by the corpus write's SQL execution only
+    (unpersisted, the split_stats write re-ran ingest -> dedup), and the
+    spine is released once the commit returns."""
+    n_lines = sum(
+        len(open(os.path.join(jsonl_shards, f)).read().splitlines())
+        for f in os.listdir(jsonl_shards)
+        if not f.startswith((".", "_"))
+    )
+    sc = spark.sparkContext
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        # One job group per published table: <root>/<table>/snap-<v>.
+        table = os.path.basename(os.path.dirname(path))
+        sc.setJobGroup(f"commit:{table}", table)
+        try:
+            return real_parquet(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    persisted = _spy_persist(spark, monkeypatch)
+    stats = build_training_corpus(spark, jsonl_shards, str(tmp_path / "pub"))
+    assert stats["n_input"] == 501  # the Observation fired exactly once
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+
+    def scans_input(sid: int) -> bool:
+        try:
+            stage = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # skipped stage: never submitted
+            return False
+        return stage.inputRecords() == n_lines
+
+    readers = {}  # table -> SQL executions with a stage scanning the input
+    for table in ("corpus", "split_stats"):
+        readers[table] = {
+            store.jobWithAssociatedSql(jid)._2().get()
+            for jid in tracker.getJobIdsForGroup(f"commit:{table}")
+            if any(map(scans_input, tracker.getJobInfo(jid).stageIds))
+        }
+    assert len(readers["corpus"]) == 1, readers
+    assert readers["split_stats"] == set(), readers
+    assert _spine(persisted).storageLevel == StorageLevel.NONE
+
+
+def test_pipeline_failed_commit_releases_spine(
+    spark, jsonl_shards, tmp_path, monkeypatch
+):
+    """A commit that raises after the spine was materialized (the
+    split_stats write fails) still releases the persisted spine."""
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if "split_stats" in path:
+            raise OSError("injected split_stats write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    persisted = _spy_persist(spark, monkeypatch)
+    root = str(tmp_path / "pub")
+    with pytest.raises(OSError, match="injected"):
+        build_training_corpus(spark, jsonl_shards, root)
+    assert _spine(persisted).storageLevel == StorageLevel.NONE
+    assert manifest.current_manifest(root) is None  # nothing published
 
 
 def test_pipeline_split_is_deterministic_and_versioned(

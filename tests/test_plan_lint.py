@@ -13,6 +13,12 @@ registry so no future entry can reintroduce them silently:
   (group count ~ KB), a TakeOrdered/Limit, or a broadcast-built
   one-row frame. The lint walks the plan tree and demands such a
   reducer somewhere in the exchange's SUBTREE.
+* **Outer-column subtree inside a lambda** — Spark evaluates a
+  higher-order-function lambda body once per array ELEMENT, so a body
+  that reads e.g. ``regexp_replace(lower(text))`` instead of a lambda
+  variable re-runs it per element: quadratic in document length for
+  the shingle builders. Such values are bound once with
+  ``functions.text.let``.
 
 Planning all entries costs ~1.5 min at sf0.001 (a handful of entries
 run bounded construction-time jobs); it is the price of making "no
@@ -55,17 +61,85 @@ def _subtree(lines: list[str], idx: int) -> list[str]:
     return out
 
 
+def _lambda_captures(plan) -> list[str]:
+    """Non-leaf subtrees of lambda bodies in a physical plan that read a
+    column (AttributeReference) but no lambda variable
+    (NamedLambdaVariable); only the largest such subtree is reported,
+    not its parts. Descends into cached (``InMemoryRelation.cachedPlan``)
+    and adaptive (``AdaptiveSparkPlanExec.inputPlan``) plans."""
+    found: list[str] = []
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    def kind(o) -> str:
+        return o.getClass().getSimpleName()
+
+    def flags(e) -> tuple[bool, bool]:
+        # (reads a column, reads a lambda variable); a node that reads a
+        # variable records its children that read only columns.
+        k = kind(e)
+        if k == "NamedLambdaVariable":
+            return False, True
+        if k == "AttributeReference":
+            return True, False
+        kids = seq(e.children())
+        kid_flags = [flags(c) for c in kids]
+        col = any(c for c, _ in kid_flags)
+        var = any(v for _, v in kid_flags)
+        if var:
+            found.extend(
+                c.toString()
+                for c, (c_col, c_var) in zip(kids, kid_flags)
+                if c_col and not c_var and c.children().size()
+            )
+        return col, var
+
+    def lambdas(e) -> None:
+        if "lambdafunction" not in e.toString():
+            return
+        if kind(e) == "LambdaFunction":
+            body = e.function()
+            col, var = flags(body)
+            if col and not var and body.children().size():
+                found.append(body.toString())
+            return
+        for c in seq(e.children()):
+            lambdas(c)
+
+    def walk(p) -> None:
+        k = kind(p)
+        if k == "AdaptiveSparkPlanExec":
+            return walk(p.inputPlan())
+        if k == "InMemoryTableScanExec":
+            walk(p.relation().cachedPlan())
+        for e in seq(p.expressions()):
+            lambdas(e)
+        for c in seq(p.children()):
+            walk(c)
+
+    walk(plan)
+    return found
+
+
 @pytest.fixture(scope="module")
-def all_plans(spark):
+def swept(spark) -> tuple[dict[str, str], dict[str, list[str]]]:
+    """Every entry planned ONCE: (plan strings, lambda captures). The
+    capture walk runs only where the plan string, which prints cached
+    and adaptive subplans, holds a lambda."""
     plans: dict[str, str] = {}
+    captures: dict[str, list[str]] = {}
     for name, e in harness.REGISTRY.items():
-        plans[name] = (
-            e.spark(spark, SF_SMOKE)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    return plans
+        plan = e.spark(spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
+        plans[name] = plan.toString()
+        if "lambdafunction" in plans[name]:
+            captures[name] = _lambda_captures(plan)
+    return plans, captures
+
+
+@pytest.fixture(scope="module")
+def all_plans(swept) -> dict[str, str]:
+    return swept[0]
 
 
 def test_no_cartesian_product_anywhere(all_plans):
@@ -128,3 +202,37 @@ def test_no_full_table_sort_without_range_partitioning(all_plans):
                 if not _REDUCERS.search(sub):
                     offenders.append((name, above.strip()[:80]))
     assert not offenders, offenders
+
+
+def test_no_lambda_reads_an_outer_column_subtree(swept):
+    offenders = {n: c for n, c in swept[1].items() if c}
+    assert not offenders, offenders
+
+
+def test_lambda_capture_walk_sees_cached_and_bound_forms(spark):
+    """The walk flags a capture inside a CACHED plan and passes the same
+    computation once the value is let-bound."""
+    from pyspark.sql import functions as F
+
+    from etl_tj_project_spark.functions.text import let
+
+    df = spark.createDataFrame([("Ab Cd",)], "text string")
+    seq = F.sequence(F.lit(1), F.lit(3))
+    norm = F.lower(F.col("text"))
+    captured = df.select(
+        F.transform(seq, lambda i: norm.substr(i, F.lit(1))).alias("a")
+    ).persist()
+    try:
+        plan = captured.select("a")._jdf.queryExecution().executedPlan()
+        assert "InMemoryTableScan" in plan.toString()
+        caps = _lambda_captures(plan)
+        assert len(caps) == 1 and caps[0].startswith("lower(text#"), caps
+    finally:
+        captured.unpersist()
+    bound = df.select(
+        let(norm, lambda s: F.transform(seq, lambda i: s.substr(i, F.lit(1))))
+    )
+    plan = bound._jdf.queryExecution().executedPlan()
+    assert "lambdafunction" in plan.toString()
+    assert _lambda_captures(plan) == []
+    assert bound.first()[0] == captured.first()[0] == ["a", "b", " "]
