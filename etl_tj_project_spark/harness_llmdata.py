@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
+from etl_tj_project_spark.cache import cache_scope, persist
 from etl_tj_project_spark.harness import register
 from etl_tj_project_spark.sources.testdata import load_table
 
@@ -346,19 +347,19 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tested recall floor. The probe phase runs over the SAME persisted
     # projection the trainer cached (train_kmeans_with_cache), so the
     # whole entry scans the source exactly once; the k-row result is
-    # materialized eagerly so the cache can be released before return.
-    cents, train = sim.train_kmeans_with_cache(e, k=8, iters=2)
-    q = train.filter(F.col("vec_id") == 0)
-    # assign stays "expr" at THIS scale: the Arrow probe wins above
-    # ~10^4 rows (strain bench: 8.5 -> 3.7 s at 80k vectors) but at
-    # sf0.1's 2,000 vectors the Python-stage startup costs more than
-    # the HOF assignment it replaces (measured 1.45 -> 1.9 s). A real
-    # corpus-scale caller passes assign="arrow" — the strain bench does.
-    top = sim.ivf_topk(train, q, k=10, centroids=cents).select(
-        "vec_id", F.round("cosine", 9).alias("cosine")
-    )
-    rows = top.collect()
-    train.unpersist()
+    # materialized eagerly so the cache is released before return.
+    with cache_scope(spark):
+        cents, train = sim.train_kmeans_with_cache(e, k=8, iters=2)
+        q = train.filter(F.col("vec_id") == 0)
+        # assign stays "expr" at THIS scale: the Arrow probe wins above
+        # ~10^4 rows (strain bench: 8.5 -> 3.7 s at 80k vectors) but at
+        # sf0.1's 2,000 vectors the Python-stage startup costs more than
+        # the HOF assignment it replaces (measured 1.45 -> 1.9 s). A real
+        # corpus-scale caller passes assign="arrow" (the strain bench does).
+        top = sim.ivf_topk(train, q, k=10, centroids=cents).select(
+            "vec_id", F.round("cosine", 9).alias("cosine")
+        )
+        rows = top.collect()
     return spark.createDataFrame(rows, top.schema)
 
 
@@ -384,19 +385,19 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same single-source-scan shape as ann_ivf_trained_topk: the ADC
     # scan + query pull reuse the trainer's persisted projection, and
     # the k-row result is materialized eagerly so the cache releases.
-    books, train = sim.train_pq_with_cache(e, m=8, ksub=16, iters=2)
-    q = train.filter(F.col("vec_id") == 0)
-    # encode stays "expr" at this scale (see ann_ivf_trained_topk's
-    # assign note; the strain bench runs the Arrow encode at 80k rows).
-    top = sim.pq_topk(
-        train, q, k=10, codebooks=books, oversample=8
-    ).select(
-        "vec_id",
-        F.round("approx_l2sq", 6).alias("approx_l2sq"),
-        F.round("cosine", 9).alias("cosine"),
-    )
-    rows = top.collect()
-    train.unpersist()
+    with cache_scope(spark):
+        books, train = sim.train_pq_with_cache(e, m=8, ksub=16, iters=2)
+        q = train.filter(F.col("vec_id") == 0)
+        # encode stays "expr" at this scale (see ann_ivf_trained_topk's
+        # assign note; the strain bench runs the Arrow encode at 80k rows).
+        top = sim.pq_topk(
+            train, q, k=10, codebooks=books, oversample=8
+        ).select(
+            "vec_id",
+            F.round("approx_l2sq", 6).alias("approx_l2sq"),
+            F.round("cosine", 9).alias("cosine"),
+        )
+        rows = top.collect()
     return spark.createDataFrame(rows, top.schema)
 
 
@@ -708,12 +709,10 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"md5(concat_ws(' ', slice(toks, s + 1, {n}))) AS span_hash))"
         )
     )
-    from etl_tj_project_spark.operators.dedup import _persist_once
-
     # The span frame feeds BOTH the repeated-fingerprint aggregate and
     # the join-back; without a persist the tokenize+window-md5 explode
     # runs twice over the corpus (round 14).
-    w = _persist_once(
+    w = persist(
         t.select("doc_id", F.explode(spans_arr).alias("sp")).select(
             "doc_id", F.col("sp.start_pos").alias("start_pos"),
             F.col("sp.span_hash").alias("span_hash"),

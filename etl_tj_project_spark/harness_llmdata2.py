@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.cache import persist
 from etl_tj_project_spark.functions import text as tx
 from etl_tj_project_spark.harness import register
 from etl_tj_project_spark.sources.testdata import load_table
@@ -464,9 +465,7 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         sim._cell_expr(F.col("embedding"), cents).alias("cell"),
     )
-    from etl_tj_project_spark.operators.dedup import _persist_once
-
-    assigned = _persist_once(assigned)
+    assigned = persist(assigned)
     a = assigned.select(
         F.col("cell"),
         F.col("vec_id").alias("id_a"),
@@ -1195,15 +1194,13 @@ def _pca_power_oracle() -> str:
         "iteration is two node-keyed shuffles, same as k-means",
 )
 def embedding_pca_power_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_tj_project_spark.operators.dedup import _persist_once
-
     scale = 1 << 20
     e = load_table(spark, sf_dir, "embeddings")
     q8 = F.transform(
         "embedding",
         lambda x: F.round(x.cast("double") * 127, 0).cast("long"),
     )
-    ql = _persist_once(
+    ql = persist(
         e.select("vec_id", F.posexplode(q8).alias("dim", "val")).select(
             "vec_id", F.col("dim").cast("long").alias("dim"), "val"
         )

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_tj_project_spark.cache import persist, release
 from etl_tj_project_spark.functions.text import (
     char_shingles,
     doc_fingerprint,
@@ -39,32 +40,6 @@ from etl_tj_project_spark.functions.text import (
     word_shingles,
 )
 from etl_tj_project_spark.functions.vectors import cosine_similarity, expr_once
-
-
-def _persist_once(df: DataFrame) -> DataFrame:
-    """persist() unless the CacheManager already holds this plan.
-
-    ``df.storageLevel`` does a CacheManager lookup by logical plan, so a
-    SECOND DataFrame object with the same plan (e.g. bench.py's
-    best-of-2 repeat of a query builder) reports the cached level and we
-    skip the redundant persist — which would otherwise log
-    "Asked to cache already cached data" and do nothing useful.
-    (``df.is_cached`` only reflects persist() called on THIS object.)
-
-    Accretion bound (ADVICE r14): operators deliberately do NOT
-    unpersist these frames — a composed downstream plan (e.g.
-    canonicalize -> containment) may still read them lazily after the
-    operator returns, which is exactly the lifetime bug the r13 CC
-    temp-dir fix was about. Each cached frame is id/pair-table-sized
-    (KB-MB at test scale, << corpus), the default MEMORY_AND_DISK level
-    is LRU-evicted under pressure, so a long session's cache footprint
-    is bounded by executor storage memory, never OOM. Long-running
-    multi-entry sessions (the full replay, bench cohorts) additionally
-    call ``spark.catalog.clearCache()`` at cohort boundaries."""
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        df = df.persist()
-    return df
 
 
 # --------------------------------------------------------------------------
@@ -231,7 +206,7 @@ def lsh_candidate_pairs(
     persisted once so both join sides share one signature computation
     (measured ~30% faster at sf0.1; the cache is band-table sized).
     """
-    b = _persist_once(
+    b = persist(
         minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
     )
     left = b.select(
@@ -290,7 +265,7 @@ def lsh_star_edges(
     (band, h) key the band table is already shuffled by.
     """
     b = minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
-    b = _persist_once(b)
+    b = persist(b)
     mins = b.groupBy("band", "h").agg(F.min(id_col).alias("doc_a"))
     return (
         b.join(mins, ["band", "h"])
@@ -327,7 +302,7 @@ def incremental_lsh_candidates(
     delta_bands = minhash_bands(
         delta_df, id_col, text_col, num_hashes, bands, shingle_k
     )
-    delta_bands = _persist_once(delta_bands)
+    delta_bands = persist(delta_bands)
     probe = base_bands.select(id_col, "band", "h").unionByName(
         delta_bands.select(id_col, "band", "h")
     )
@@ -718,7 +693,7 @@ def release_components(labels: DataFrame) -> None:
     if ids:
         _unpersist_rdd_ids(sc, ids)
     if cache is not None:
-        cache.unpersist()
+        release(cache)
     if dirs:
         _hadoop_delete(sc, dirs)
     if tmpdir is not None:
@@ -988,7 +963,7 @@ def connected_components(
     # read it, and without the cache each would re-execute the upstream
     # plan (the LSH self-join ran twice per call before this — measured
     # at sf0.1 it was the largest single cost of the operator).
-    sym = _persist_once(
+    sym = persist(
         edges.select(
             F.explode(
                 F.array(
@@ -1015,7 +990,7 @@ def connected_components(
         # result themselves; sym stays persisted until release.
         out._cc_setup_cache = sym
         return out
-    nodes = _persist_once(sym.select("n").distinct())
+    nodes = persist(sym.select("n").distinct())
     # Self-loops fold "own label" into the neighborhood aggregate, so
     # each round's closed-neighborhood minimum is ONE join + groupBy
     # (no separate least(own, neighbor_min) join).
@@ -1043,8 +1018,8 @@ def connected_components(
     if parts < withself.rdd.getNumPartitions():
         withself = withself.repartition(parts, "m")
         labels = labels.repartition(parts, "n")
-    withself = _persist_once(withself)
-    labels = _persist_once(labels)
+    withself = persist(withself)
+    labels = persist(labels)
     # Seed the monotone probe with the initial label sum so a round that
     # changes nothing is detected immediately. Padding the edge table
     # into the same aggregate (NULL labels are sum-neutral) makes this
@@ -1057,7 +1032,7 @@ def connected_components(
         .collect()[0][0]
         or 0
     )
-    sym.unpersist()
+    release(sym)
     sc = edges.sparkSession.sparkContext
     own_tmpdir: str | None = None
     if reliable and sc._jsc.sc().getCheckpointDir().isEmpty():
@@ -1116,11 +1091,9 @@ def connected_components(
             labels = new_labels.localCheckpoint(eager=False)
         cur_sum = labels.agg(F.sum("lab")).collect()[0][0] or 0
         # The probe materialized this round's checkpoint; the previous
-        # round's blocks (and, after the first probe, the initial label
-        # cache) are now unreachable — free them deterministically.
-        if init_labels is not None:
-            init_labels.unpersist()
-            init_labels = None
+        # round's blocks and the initial label cache (a no-op release
+        # after the first round) are unreachable — free them now.
+        release(init_labels)
         now_ids = _persistent_rdd_ids(sc)
         fresh = now_ids - known_ids
         _unpersist_rdd_ids(sc, ckpt_ids)
@@ -1136,8 +1109,8 @@ def connected_components(
             converged = True
             break
         prev_sum = cur_sum
-    withself.unpersist()
-    nodes.unpersist()
+    release(withself)
+    release(nodes)
     if not converged:
         _unpersist_rdd_ids(sc, ckpt_ids)
         if reliable:
@@ -1203,33 +1176,6 @@ def connected_components(
 _VERIFY_BITSET_MAX_TERMS = 4096
 _VERIFY_DICT_MAX_TERMS = 1 << 22
 
-# Per-PROCESS memo of the tier-dispatch vocabulary counts — the scalar
-# twin of _persist_once's CacheManager reuse (the r16-approved
-# within-run contract): a repeated build of the same query in one
-# session (bench best-of-2, replay) pays the count job once. Never
-# persisted, never cross-process; the parquet inputs are immutable for
-# the life of a session (the same assumption every _persist_once cache
-# already makes). Lookup uses LogicalPlan.sameResult — EXACTLY the
-# CacheManager's matching rule — because a string/hash key is not safe:
-# two LocalRelations with the same schema but different rows
-# canonicalize to the same string, and a stale count would size the
-# bitset wrong (caught by tests/test_verify_tiers.py in-suite).
-_COUNT_MEMO: list = []  # [(JVM analyzed plan, count)]
-
-
-def _count_once(df: DataFrame) -> int:
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        for p, n in _COUNT_MEMO:
-            if p.sameResult(plan):
-                return n
-    except Exception:
-        return df.count()
-    n = df.count()
-    _COUNT_MEMO.append((plan, n))
-    return n
-
-
 def _term_dictionary(dfreq: DataFrame) -> DataFrame:
     """(__term, __tid, __df): dense 1-based ids in rarest-first
     (df, term) order. One vocab-global row_number — vocabulary-sized
@@ -1282,7 +1228,7 @@ def _set_reprs_int(toks_i: DataFrame, n_vocab: int):
         def inter(a: Column, b: Column) -> Column:
             return F.size(F.array_intersect(a, b)).cast("long")
 
-    return _persist_once(reps), inter
+    return persist(reps), inter
 
 
 def prefix_filter_jaccard_pairs(
@@ -1342,7 +1288,7 @@ def prefix_filter_jaccard_pairs(
     output (tier rationale above _VERIFY_BITSET_MAX_TERMS).
 
     Construction is not lazy: it runs one eager count job
-    (``_count_once(dfreq)``, the vocabulary size) to pick the verify tier.
+    (``dfreq.count()``, the vocabulary size) to pick the verify tier.
 
     At 100 TB: one token-distinct shuffle, one df aggregation, one
     (doc)-keyed window for prefix ranks, one term-keyed candidate
@@ -1356,7 +1302,7 @@ def prefix_filter_jaccard_pairs(
     # that populates the persisted postings ran as one task (measured
     # 4.5x slower than spread on the 13-gram twin); no-op when the
     # input is already well-split.
-    toks = _persist_once(
+    toks = persist(
         _ensure_parallelism(df).select(
             F.col(id_col).alias("__id"),
             F.explode(
@@ -1378,12 +1324,12 @@ def prefix_filter_jaccard_pairs(
     # Dictionary-encode when the vocabulary is bounded (r18, see the
     # tier rationale above _VERIFY_BITSET_MAX_TERMS): the count is one
     # aggregate over the persisted postings, vocabulary-sized output.
-    n_vocab = _count_once(dfreq)
+    n_vocab = dfreq.count()
     if n_vocab <= _VERIFY_DICT_MAX_TERMS:
         # __tid ascends in (df, term) order, so ordering by __tid IS
         # the rarest-first order — the rank window drops the dfreq
         # join the string path needs.
-        toks_w = _persist_once(
+        toks_w = persist(
             toks.join(_term_dictionary(dfreq), "__term").select(
                 "__id", F.col("__tid").alias("__term")
             )
@@ -1414,7 +1360,7 @@ def prefix_filter_jaccard_pairs(
     req = F.expr(f"({t_num}L * __sz + {t_den - 1}L) div {t_den}L").cast(
         "long"
     )
-    prefix = _persist_once(
+    prefix = persist(
         ranked.filter(
             F.col("__rn") <= F.col("__sz") - req + F.lit(1)
         ).select("__id", "__term", "__rn", "__sz")
@@ -1478,7 +1424,7 @@ def prefix_filter_jaccard_pairs(
         tok_sets, inter_fn = _set_reprs_int(toks_w, n_vocab)
         tok_sets = tok_sets.withColumnRenamed("__rep", "__set")
     else:
-        tok_sets = _persist_once(
+        tok_sets = persist(
             toks_w.groupBy("__id").agg(
                 F.sort_array(F.collect_list("__term")).alias("__set"),
                 F.count(F.lit(1)).cast("long").alias("__sz"),
@@ -1548,7 +1494,7 @@ def _containment_candidate_stages(
     # explode it parallelizes. The Jaccard twin's unigram explode WON
     # with the same spread — the discriminator is per-row Generate
     # compute vs repartition cost. Left un-spread deliberately.)
-    toks = _persist_once(
+    toks = persist(
         df.select(F.col(id_col).alias("__id"), F.explode(sh).alias("__term"))
     )
     dfreq = toks.groupBy("__term").agg(
@@ -1559,9 +1505,9 @@ def _containment_candidate_stages(
     # Dictionary-encode when the shingle vocabulary is bounded (r18,
     # same tiering as the Jaccard twin — rationale above
     # _VERIFY_BITSET_MAX_TERMS): int join keys + int verify sets.
-    n_vocab = _count_once(dfreq)
+    n_vocab = dfreq.count()
     if n_vocab <= _VERIFY_DICT_MAX_TERMS:
-        toks_w = _persist_once(
+        toks_w = persist(
             toks.join(_term_dictionary(dfreq), "__term").select(
                 "__id", F.col("__tid").alias("__term")
             )
@@ -1623,7 +1569,7 @@ def containment_candidate_pairs(
     verify stage would have to process. The guardrail strain counts
     this on raw vs canonicalized corpora to show canonicalize-first
     shrinks the verify input, not just the final output. Construction
-    runs one eager count job (``_count_once(dfreq)`` in
+    runs one eager count job (``dfreq.count()`` in
     :func:`_containment_candidate_stages`) to pick the verify tier."""
     _, _, cand, _ = _containment_candidate_stages(
         df, id_col, text_col, ngram, t_num, t_den
@@ -1667,7 +1613,7 @@ def prefix_filter_containment_pairs(
     Output pairs are ordered (doc_a = the contained side), both
     directions emitted independently.
 
-    Construction runs one eager count job (``_count_once(dfreq)`` in
+    Construction runs one eager count job (``dfreq.count()`` in
     :func:`_containment_candidate_stages`) to pick the verify tier.
     """
     toks, sizes, cand, n_vocab = _containment_candidate_stages(
@@ -1688,7 +1634,7 @@ def prefix_filter_containment_pairs(
         shingle_sets, inter_fn = _set_reprs_int(toks, n_vocab)
         shingle_sets = shingle_sets.withColumnRenamed("__rep", "__set")
     else:
-        shingle_sets = _persist_once(
+        shingle_sets = persist(
             toks.groupBy("__id").agg(
                 F.sort_array(F.collect_list("__term")).alias("__set"),
                 F.count(F.lit(1)).cast("long").alias("__sz"),
@@ -1909,18 +1855,19 @@ def narrow_persisted(
     stage over a cached table launches one map task per cached
     partition, so a few-MB candidate-pair table inheriting a 32-64
     partition layout makes multi-join DAGs scheduling-bound. The
-    extra count is served from the cache being built anyway.
+    extra count is served from the cache being built anyway; the
+    pre-repartition copy is released once the narrow one is built.
     """
-    cached = _persist_once(df)
+    cached = persist(df)
     n = cached.count()
     cap = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     parts = max(1, min(cap, int(n // rows_per_partition) + 1))
     if parts < cached.rdd.getNumPartitions():
-        narrow = _persist_once(cached.repartition(parts, key))
+        narrow = persist(cached.repartition(parts, key))
         narrow.count()
-        cached.unpersist()
+        release(cached)
         return narrow
     return cached
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.cache import cache_scope, persist
+
 
 def _closed_triangles(pairs: DataFrame) -> DataFrame:
     """The shared core of both triangle statistics: one row
@@ -206,68 +208,62 @@ def lcc_second_pass_delta(
         )
     pairs = dd.narrow_persisted(pairs, "doc_a")
     lcc = local_clustering(pairs)
-    # Persisted ONCE (r17 optimization, guide §2.4): ``high`` feeds BOTH
-    # endpoint joins of the merge-edge filter below; un-persisted, the
-    # entire LCC subtree (degree profile + degree-oriented wedge joins)
-    # executes twice inside ``he`` — the two renamed copies are not
-    # exchange-reusable. The cached set is merge-candidate-sized (tiny
-    # by construction: the high-lcc slice of the survivor graph).
-    high = dd._persist_once(
-        lcc.filter(
-            (F.col("degree") >= 2) & (F.col("lcc_milli") >= threshold_milli)
-        ).select("node")
-    )
-    # Persisted ONCE: the emptiness probe below and the CC both read
-    # this cache, so the two candidate-edge joins compute exactly one
-    # time (VERDICT r16 noted the earlier limit(1) probe paid an extra
-    # tiny job on the non-empty path — the count that builds the cache
-    # now IS the probe).
-    he = dd._persist_once(
-        pairs.join(high.withColumnRenamed("node", "doc_a"), "doc_a")
-        .join(high.withColumnRenamed("node", "doc_b"), "doc_b")
-        .select("doc_a", "doc_b")
-    )
     id_type = docs.schema["doc_id"].dataType
-    n_he = he.count()
-    # he's cache is built by the count above; ``high`` has no further
-    # reader on either path (ADVICE r17) — release it eagerly like he.
-    high.unpersist()
-    if n_he == 0:
-        # Fixpoint reached (the idempotency test's steady state):
-        # return a typed empty delta rather than running CC on an
-        # empty edge list.
-        from pyspark.sql import types as T
-
-        empty = T.StructType(
-            [
-                T.StructField("merged_component_id", id_type),
-                T.StructField("component_id", id_type),
-                T.StructField("survivor_doc_id", id_type),
-                T.StructField("new_canonical_doc_id", id_type),
-                T.StructField("n_families", T.LongType()),
-                T.StructField("n_docs_total", T.LongType()),
-            ]
+    # ``high`` and ``he`` have no reader once the CC labels are written
+    # out; the scope releases them (he first) on both paths below.
+    with cache_scope(docs.sparkSession):
+        # Persisted ONCE (r17 optimization, guide §2.4): ``high`` feeds
+        # BOTH endpoint joins of the merge-edge filter below; un-persisted,
+        # the entire LCC subtree (degree profile + degree-oriented wedge
+        # joins) executes twice inside ``he`` — the two renamed copies are
+        # not exchange-reusable. The cached set is merge-candidate-sized
+        # (tiny by construction: the high-lcc slice of the survivor graph).
+        high = persist(
+            lcc.filter(
+                (F.col("degree") >= 2) & (F.col("lcc_milli") >= threshold_milli)
+            ).select("node")
         )
-        he.unpersist()
-        return docs.sparkSession.createDataFrame([], empty)
+        # Persisted ONCE: the emptiness probe below and the CC both read
+        # this cache, so the two candidate-edge joins compute exactly one
+        # time (the count that builds the cache IS the probe).
+        he = persist(
+            pairs.join(high.withColumnRenamed("node", "doc_a"), "doc_a")
+            .join(high.withColumnRenamed("node", "doc_b"), "doc_b")
+            .select("doc_a", "doc_b")
+        )
+        if he.count() == 0:
+            # Fixpoint reached (the idempotency test's steady state):
+            # return a typed empty delta rather than running CC on an
+            # empty edge list.
+            from pyspark.sql import types as T
+
+            empty = T.StructType(
+                [
+                    T.StructField("merged_component_id", id_type),
+                    T.StructField("component_id", id_type),
+                    T.StructField("survivor_doc_id", id_type),
+                    T.StructField("new_canonical_doc_id", id_type),
+                    T.StructField("n_families", T.LongType()),
+                    T.StructField("n_docs_total", T.LongType()),
+                ]
+            )
+            return docs.sparkSession.createDataFrame([], empty)
+        # Materialized labels (FileScan), not raw connected_components:
+        # keeps the size-dispatched numpy CC an internal detail so the
+        # registered entry's plan carries no Python stage (the JVM-purity
+        # sweep), and releases the CC cache/checkpoint state eagerly.
+        labels = dd.materialize_labels(
+            dd.connected_components(he, "doc_a", "doc_b")
+        )
     # Name-based USING joins throughout: `labels` derives from
     # `manifest` (survivors -> pairs -> merge edges), so qualified
     # df["col"] references across the re-join trip Spark's ambiguous
     # self-join detection; renamed key columns keep every attribute
     # unique instead.
-    # Materialized labels (FileScan), not raw connected_components:
-    # keeps the size-dispatched numpy CC an internal detail so the
-    # registered entry's plan carries no Python stage (the JVM-purity
-    # sweep), and releases the CC cache/checkpoint state eagerly.
-    labels = dd.materialize_labels(
-        dd.connected_components(he, "doc_a", "doc_b")
-    ).select(
+    labels = labels.select(
         F.col("node").alias("survivor_doc_id"),
         F.col("component_id").alias("merged_component_id"),
     )
-    # Labels are parquet-materialized; the cached edge table has no
-    # further reader.
-    he.unpersist()
     mem = labels.join(
         manifest.withColumnRenamed("canonical_doc_id", "survivor_doc_id"),
         "survivor_doc_id",

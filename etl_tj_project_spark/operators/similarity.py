@@ -23,6 +23,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.cache import cache_scope, persist
 from etl_tj_project_spark.functions.vectors import cosine_similarity, expr_once
 from etl_tj_project_spark.operators.dedup import _ensure_parallelism
 
@@ -541,14 +542,12 @@ def _train_lloyd(
     # on a single core (measured at sf0.1: each iteration ~1.2 s on one
     # task); at lake scale the input is already well-split and this is
     # a no-op.
-    train = _ensure_parallelism(df.select(id_col, vec_col)).persist()
+    train = persist(_ensure_parallelism(df.select(id_col, vec_col)))
     first = train.orderBy(id_col).select(vec_col).limit(k).collect()
     if len(first) < k:
-        train.unpersist()
         raise ValueError(f"need at least {k} vectors, found {len(first)}")
     dim = len(first[0][0])
     if dim % m:
-        train.unpersist()
         raise ValueError(f"dim {dim} not divisible by m={m}")
     books = np.asarray([r[0] for r in first], dtype=np.float64)
     books = np.ascontiguousarray(books.reshape(k, m, dim // m).swapaxes(0, 1))
@@ -649,11 +648,11 @@ def train_kmeans(
     Lloyd's movement shrinks geometrically on clustered data, so the cap
     is rarely reached.
     """
-    cents, train = train_kmeans_with_cache(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, tol=tol,
-        strategy=strategy,
-    )
-    train.unpersist()
+    with cache_scope(df.sparkSession):
+        cents, _ = train_kmeans_with_cache(
+            df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, tol=tol,
+            strategy=strategy,
+        )
     return cents
 
 
@@ -671,10 +670,10 @@ def train_kmeans_with_cache(
     search/probe phase (``ivf_topk``'s assignment scan, the query-vector
     pull) over the same cache instead of re-scanning the source — the
     trained-ANN entries went from four source scans per run (init, cache
-    materialization, query pull, probe scan) to ONE. The caller owns the
-    unpersist. MEMORY_AND_DISK via the default persist(): at 10^10
-    vectors the working set spills rather than recomputes, and
-    partially-cached partitions stay correct.
+    materialization, query pull, probe scan) to ONE. The cache belongs to
+    the caller's ``cache_scope`` (or the session). MEMORY_AND_DISK via
+    the default persist(): at 10^10 vectors the working set spills
+    rather than recomputes, and partially-cached partitions stay correct.
     """
     books, train = _train_lloyd(
         df, k, 1, iters, id_col, vec_col, tol, strategy, _cosine_codes
@@ -738,11 +737,11 @@ def train_pq(
     id, so retrains reproduce. ``iters`` is a cap with a
     movement-threshold early exit like train_kmeans.
     """
-    books, train = train_pq_with_cache(
-        df, m=m, ksub=ksub, iters=iters,
-        id_col=id_col, vec_col=vec_col, tol=tol, strategy=strategy,
-    )
-    train.unpersist()
+    with cache_scope(df.sparkSession):
+        books, _ = train_pq_with_cache(
+            df, m=m, ksub=ksub, iters=iters,
+            id_col=id_col, vec_col=vec_col, tol=tol, strategy=strategy,
+        )
     return books
 
 
@@ -759,7 +758,7 @@ def train_pq_with_cache(
     """:func:`train_pq`, but also returns the STILL-PERSISTED
     ``(id, vec)`` training projection for the caller's encode/ADC scan —
     same single-source-scan contract as :func:`train_kmeans_with_cache`;
-    the caller owns the unpersist."""
+    the cache belongs to the caller's ``cache_scope`` (or the session)."""
     books, train = _train_lloyd(
         df, ksub, m, iters, id_col, vec_col, tol, strategy, _l2_codes
     )

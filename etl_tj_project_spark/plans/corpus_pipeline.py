@@ -19,11 +19,11 @@ a constant number of renames regardless of data size.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_tj_project_spark import manifest
+from etl_tj_project_spark.cache import cache_scope, persist
 from etl_tj_project_spark.operators.corpus import (
     QualityThresholds,
     prepare_corpus,
@@ -92,88 +92,88 @@ def build_training_corpus(
     obs_in = Observation("corpus_input") if use_observe else None
     if use_observe:
         clean = clean.observe(obs_in, F.count(F.lit(1)).alias("n"))
-    # Optional C4-style boilerplate removal BEFORE dedup (C4's order:
-    # template text must vanish before fingerprints are computed, or
-    # every page sharing a header near-dups every other page). The
-    # chunk-frequency side of the self-join is built from the
-    # UN-observed frame: an Observation node appearing on both sides of
-    # a self-join fails metric collection (and would double-count).
-    if boilerplate_min_docs is not None:
-        from etl_tj_project_spark.operators.corpus import (
-            boilerplate_chunk_stats,
+    # Every cache the stages below build (the LSH band table, the narrowed
+    # pair tables, the spine) is last read by the commit.
+    with cache_scope(spark):
+        # Optional C4-style boilerplate removal BEFORE dedup (C4's order:
+        # template text must vanish before fingerprints are computed, or
+        # every page sharing a header near-dups every other page). The
+        # chunk-frequency side of the self-join is built from the
+        # UN-observed frame: an Observation node appearing on both sides
+        # of a self-join fails metric collection (and would double-count).
+        if boilerplate_min_docs is not None:
+            from etl_tj_project_spark.operators.corpus import (
+                boilerplate_chunk_stats,
+            )
+
+            stats = boilerplate_chunk_stats(
+                clean_raw, min_docs=boilerplate_min_docs
+            ).filter(F.col("n_kept") > 0)
+            clean = (
+                clean.drop("text")
+                .join(stats.select("doc_id", "kept_text"), "doc_id")
+                .withColumnRenamed("kept_text", "text")
+            )
+        dedup_manifest = None
+        if lcc_merge_threshold_milli is not None:
+            from etl_tj_project_spark.operators.corpus import (
+                prepare_corpus_canonical,
+            )
+
+            curated, dedup_manifest = prepare_corpus_canonical(
+                clean,
+                th=thresholds,
+                languages=languages,
+                lcc_merge_threshold_milli=lcc_merge_threshold_milli,
+            )
+        else:
+            curated = prepare_corpus(
+                clean,
+                th=thresholds,
+                languages=languages,
+                near_dup_threshold=near_dup_threshold,
+            )
+        # Optional model-based filter AFTER the rule-based one and after
+        # dedup (the two-stage curation: cheap rules first, model second;
+        # post-dedup so the model scores each surviving doc exactly once).
+        if classifier_weights is not None:
+            from etl_tj_project_spark.operators.corpus import (
+                classifier_quality_filter,
+            )
+
+            curated = classifier_quality_filter(curated, classifier_weights)
+        # PII redaction AFTER dedup (dedup must see original bytes so
+        # fingerprints match across copies; redaction must not create
+        # artificial near-dups).
+        redacted = curated.withColumn(
+            "text", F.regexp_replace(F.col("text"), "[0-9][0-9][0-9]+", "<NUM>")
+        )
+        h2 = F.substring(
+            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
+        )
+        final = redacted.withColumn(
+            "split",
+            F.when(h2 < train_frac_hex, "train")
+            .when(h2 < val_hi_hex, "val")
+            .otherwise("test"),
         )
 
-        stats = boilerplate_chunk_stats(
-            clean_raw, min_docs=boilerplate_min_docs
-        ).filter(F.col("n_kept") > 0)
-        clean = (
-            clean.drop("text")
-            .join(stats.select("doc_id", "kept_text"), "doc_id")
-            .withColumnRenamed("kept_text", "text")
+        stats = final.groupBy("source", "split").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.length("text")).cast("long").alias("n_chars"),
         )
-    dedup_manifest = None
-    if lcc_merge_threshold_milli is not None:
-        from etl_tj_project_spark.operators.corpus import (
-            prepare_corpus_canonical,
-        )
-
-        curated, dedup_manifest = prepare_corpus_canonical(
-            clean,
-            th=thresholds,
-            languages=languages,
-            lcc_merge_threshold_milli=lcc_merge_threshold_milli,
-        )
-    else:
-        curated = prepare_corpus(
-            clean,
-            th=thresholds,
-            languages=languages,
-            near_dup_threshold=near_dup_threshold,
-        )
-    # Optional model-based filter AFTER the rule-based one and after
-    # dedup (the two-stage curation: cheap rules first, model second;
-    # post-dedup so the model scores each surviving doc exactly once).
-    if classifier_weights is not None:
-        from etl_tj_project_spark.operators.corpus import (
-            classifier_quality_filter,
-        )
-
-        curated = classifier_quality_filter(curated, classifier_weights)
-    # PII redaction AFTER dedup (dedup must see original bytes so
-    # fingerprints match across copies; redaction must not create
-    # artificial near-dups).
-    redacted = curated.withColumn(
-        "text", F.regexp_replace(F.col("text"), "[0-9][0-9][0-9]+", "<NUM>")
-    )
-    h2 = F.substring(
-        F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
-    )
-    final = redacted.withColumn(
-        "split",
-        F.when(h2 < train_frac_hex, "train")
-        .when(h2 < val_hi_hex, "val")
-        .otherwise("test"),
-    )
-
-    stats = final.groupBy("source", "split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.length("text")).cast("long").alias("n_chars"),
-    )
-    tables = {"corpus": final, "split_stats": stats}
-    if quarantine is not None:
-        tables["quarantine"] = quarantine
-    if dedup_manifest is not None:
-        tables["dedup_manifest"] = dedup_manifest
-    # ``split_stats`` aggregates ``final``: unpersisted, the commit ran
-    # the quality -> language -> exact -> LSH -> Jaccard lineage twice
-    # (once per table). Cached, the corpus write materializes the spine
-    # once (the Observation fires in that job only) and split_stats
-    # reads the cache. Released on every path out of the commit.
-    final.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+        tables = {"corpus": final, "split_stats": stats}
+        if quarantine is not None:
+            tables["quarantine"] = quarantine
+        if dedup_manifest is not None:
+            tables["dedup_manifest"] = dedup_manifest
+        # ``split_stats`` aggregates ``final``: unpersisted, the commit
+        # ran the quality -> language -> exact -> LSH -> Jaccard lineage
+        # twice (once per table). Cached, the corpus write materializes
+        # the spine once (the Observation fires in that job only) and
+        # split_stats reads the cache.
+        persist(final)
         version = manifest.commit(out_root, tables)
-    finally:
-        final.unpersist()
 
     published = manifest.read_table(spark, out_root, "corpus")
     n_out = published.count()

@@ -9,8 +9,9 @@
 Where the reference hand-rolls optimization, Catalyst covers it (SURVEY
 §4): the dblink-inlined day/status filter becomes a declarative filter that
 pushes into the scan; the single-statement CTE chain that feeds three
-INSERTs at once becomes an explicit ``.persist()`` of the shared union —
-the one optimization Spark does NOT do automatically across actions.
+INSERTs at once becomes an explicit cache of the shared union (owned by the
+day's ``cache_scope``) — the one optimization Spark does NOT do
+automatically across actions.
 Cross-table atomicity (the reference commits all three aggregates in one
 transaction) maps to the staged-rename protocol in
 io.commit_partitions_atomic: stage all three day-partitions first, then
@@ -20,12 +21,13 @@ publish with metadata renames only.
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from etl_tj_project_spark import io as lake_io
+from etl_tj_project_spark.cache import cache_scope, persist
 from etl_tj_project_spark.operators import aggregates as agg
 from etl_tj_project_spark.operators import dims as dims_ops
 from etl_tj_project_spark.operators import projections as proj
@@ -97,7 +99,8 @@ def run_daily(
     """DAG 2 for one logical date ``ds`` ('YYYY-MM-DD').
 
     Returns the three aggregate DataFrames; when ``wh`` is given they are
-    also written with dynamic partition overwrite (idempotent re-runs).
+    also written with dynamic partition overwrite (idempotent re-runs);
+    without ``wh`` they read the union cache, which the caller then owns.
     """
     tune(spark)
     bus = proj.filter_day_success(proj.vw_trx_bus(bus_raw), ds)
@@ -105,8 +108,8 @@ def run_daily(
 
     # One cached pass feeds agg_by_card and agg_by_tariff (the reference's
     # chained-CTE single-statement trick, ref dag_datapelangan.py:172-234).
-    unioned = agg.union_trx(bus, halte).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with cache_scope(spark) if wh is not None else nullcontext():
+        unioned = persist(agg.union_trx(bus, halte))
         by_card = agg.agg_by_card_from_union(unioned)
         by_tariff = agg.agg_by_tariff_from_union(unioned)
         by_route = agg.agg_by_route(
@@ -126,9 +129,6 @@ def run_daily(
             "agg_by_route": by_route,
             "agg_by_tariff": by_tariff,
         }
-    finally:
-        if wh is not None:
-            unioned.unpersist()
 
 
 def raw_trx_from_csv(spark: SparkSession, data_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -46,6 +46,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_tj_project_spark.cache import cache_scope, persist
 from etl_tj_project_spark.operators import dedup as dd
 from etl_tj_project_spark.operators import similarity as sim
 from etl_tj_project_spark.sources.testdata import load_table
@@ -214,35 +215,35 @@ def run_ivf_strain(
         n_src * replicas * dim > sim._KMEANS_SINGLE_TASK_ELEMENTS,
         f"strain vectors too small: {n_src * replicas} x {dim}",
     )
-    t0 = time.perf_counter()
-    cents, train = sim.train_kmeans_with_cache(e, k=8, iters=2)
-    q = train.filter(F.col("vec_id") == 0)
-    top = sim.ivf_topk(train, q, k=10, centroids=cents, assign="arrow")
-    n_top = top.count()
-    result = {
-        "vectors": n_src * replicas,
-        "topk_rows": n_top,
-        "sec_distributed": round(time.perf_counter() - t0, 4),
-    }
-    if check_equality:
-        # The equality pass doubles as the local-vs-distributed A/B at
-        # strain scale: same data, same update rule, single-task path.
+    with cache_scope(spark):
         t0 = time.perf_counter()
-        local_cents = sim.train_kmeans(
-            e, k=8, iters=2, strategy="local"
-        )
-        worst = max(
-            abs(a - b)
-            for ca, cb in zip(cents, local_cents)
-            for a, b in zip(ca, cb)
-        )
-        _require(
-            worst < 1e-6,
-            f"distributed/local centroid divergence {worst}",
-        )
-        result["centroid_max_abs_diff"] = worst
-        result["sec_local_strategy"] = round(time.perf_counter() - t0, 4)
-    train.unpersist()
+        cents, train = sim.train_kmeans_with_cache(e, k=8, iters=2)
+        q = train.filter(F.col("vec_id") == 0)
+        top = sim.ivf_topk(train, q, k=10, centroids=cents, assign="arrow")
+        n_top = top.count()
+        result = {
+            "vectors": n_src * replicas,
+            "topk_rows": n_top,
+            "sec_distributed": round(time.perf_counter() - t0, 4),
+        }
+        if check_equality:
+            # The equality pass doubles as the local-vs-distributed A/B at
+            # strain scale: same data, same update rule, single-task path.
+            t0 = time.perf_counter()
+            local_cents = sim.train_kmeans(
+                e, k=8, iters=2, strategy="local"
+            )
+            worst = max(
+                abs(a - b)
+                for ca, cb in zip(cents, local_cents)
+                for a, b in zip(ca, cb)
+            )
+            _require(
+                worst < 1e-6,
+                f"distributed/local centroid divergence {worst}",
+            )
+            result["centroid_max_abs_diff"] = worst
+            result["sec_local_strategy"] = round(time.perf_counter() - t0, 4)
     return result
 
 
@@ -268,36 +269,36 @@ def run_pq_strain(
         n_src * replicas * dim > sim._KMEANS_SINGLE_TASK_ELEMENTS,
         f"strain vectors too small: {n_src * replicas} x {dim}",
     )
-    t0 = time.perf_counter()
-    books, train = sim.train_pq_with_cache(e, m=8, ksub=16, iters=2)
-    q = train.filter(F.col("vec_id") == 0)
-    top = sim.pq_topk(
-        train, q, k=10, codebooks=books, oversample=8, encode="arrow"
-    )
-    n_top = top.count()
-    result = {
-        "vectors": n_src * replicas,
-        "topk_rows": n_top,
-        "sec_distributed": round(time.perf_counter() - t0, 4),
-    }
-    if check_equality:
+    with cache_scope(spark):
         t0 = time.perf_counter()
-        local_books = sim.train_pq(
-            e, m=8, ksub=16, iters=2, strategy="local"
+        books, train = sim.train_pq_with_cache(e, m=8, ksub=16, iters=2)
+        q = train.filter(F.col("vec_id") == 0)
+        top = sim.pq_topk(
+            train, q, k=10, codebooks=books, oversample=8, encode="arrow"
         )
-        worst = max(
-            abs(a - b)
-            for bj, lj in zip(books, local_books)
-            for cb, cl in zip(bj, lj)
-            for a, b in zip(cb, cl)
-        )
-        _require(
-            worst < 1e-6,
-            f"distributed/local codebook divergence {worst}",
-        )
-        result["codebook_max_abs_diff"] = worst
-        result["sec_local_strategy"] = round(time.perf_counter() - t0, 4)
-    train.unpersist()
+        n_top = top.count()
+        result = {
+            "vectors": n_src * replicas,
+            "topk_rows": n_top,
+            "sec_distributed": round(time.perf_counter() - t0, 4),
+        }
+        if check_equality:
+            t0 = time.perf_counter()
+            local_books = sim.train_pq(
+                e, m=8, ksub=16, iters=2, strategy="local"
+            )
+            worst = max(
+                abs(a - b)
+                for bj, lj in zip(books, local_books)
+                for cb, cl in zip(bj, lj)
+                for a, b in zip(cb, cl)
+            )
+            _require(
+                worst < 1e-6,
+                f"distributed/local codebook divergence {worst}",
+            )
+            result["codebook_max_abs_diff"] = worst
+            result["sec_local_strategy"] = round(time.perf_counter() - t0, 4)
     return result
 
 
@@ -915,43 +916,43 @@ def run_containment_strain(
         (F.col("doc_id") + F.col("r") * shift).alias("doc_id"),
         text.alias("text"),
     )
-    t0 = time.perf_counter()
-    pairs = dd_ops.prefix_filter_containment_pairs(
-        fam, "doc_id", "text", ngram=3, t_num=4, t_den=5
-    )
-    # Persist before the two counts (ADVICE r12): without it the
-    # cross-copy check re-executes the whole candidate join + verify a
-    # second time outside the timed window.
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    sec = round(time.perf_counter() - t0, 4)
-    cross = pairs.filter(
-        F.expr(f"doc_a div {shift}") != F.expr(f"doc_b div {shift}")
-    ).count()
-    pairs.unpersist()
-    if ring_clean:
-        _require(
-            cross == 0, f"cross-copy containment pairs exist: {cross}"
+    with cache_scope(spark):
+        t0 = time.perf_counter()
+        pairs = dd_ops.prefix_filter_containment_pairs(
+            fam, "doc_id", "text", ngram=3, t_num=4, t_den=5
         )
-        _require(
-            n_pairs == replicas * base_pairs,
-            f"per-copy completeness broken: {n_pairs} != "
-            f"{replicas} * {base_pairs}",
-        )
-    else:
-        # Out-of-ring characters survive rotation unrotated, so copies
-        # may share shingles: the floor direction is still exact (every
-        # within-copy pair exists by bijection of the in-ring part
-        # being a superset relation... conservatively: completeness can
-        # only ADD candidate pairs), equality is not guaranteed.
-        _require(
-            n_pairs >= replicas * base_pairs,
-            f"completeness floor broken: {n_pairs} < "
-            f"{replicas} * {base_pairs}",
-        )
-    # "docs" is the true inflated row count (ADVICE r12: shift*replicas
-    # over-reports when the id space is sparse); id_space is the
-    # synthetic id range for reference.
+        # Persist before the two counts (ADVICE r12): without it the
+        # cross-copy check re-executes the whole candidate join + verify a
+        # second time outside the timed window.
+        pairs = persist(pairs)
+        n_pairs = pairs.count()
+        sec = round(time.perf_counter() - t0, 4)
+        cross = pairs.filter(
+            F.expr(f"doc_a div {shift}") != F.expr(f"doc_b div {shift}")
+        ).count()
+        if ring_clean:
+            _require(
+                cross == 0, f"cross-copy containment pairs exist: {cross}"
+            )
+            _require(
+                n_pairs == replicas * base_pairs,
+                f"per-copy completeness broken: {n_pairs} != "
+                f"{replicas} * {base_pairs}",
+            )
+        else:
+            # Out-of-ring characters survive rotation unrotated, so copies
+            # may share shingles: the floor direction is still exact (every
+            # within-copy pair exists by bijection of the in-ring part
+            # being a superset relation... conservatively: completeness can
+            # only ADD candidate pairs), equality is not guaranteed.
+            _require(
+                n_pairs >= replicas * base_pairs,
+                f"completeness floor broken: {n_pairs} < "
+                f"{replicas} * {base_pairs}",
+            )
+        # "docs" is the true inflated row count (ADVICE r12: shift*replicas
+        # over-reports when the id space is sparse); id_space is the
+        # synthetic id range for reference.
     return {
         "docs": d.count() * replicas,
         "id_space": shift * replicas,
@@ -1025,84 +1026,82 @@ def run_containment_guardrail_strain(
         "n_chars",
     )
 
-    # Direct path: what the verify stage WOULD have to process on the
-    # inflated corpus. Candidates only — the full verify is the 32x
-    # §25b row and is exactly what the guardrail exists to avoid.
-    t0 = time.perf_counter()
-    cand_direct = dd_ops.containment_candidate_pairs(
-        fam, "doc_id", "text", ngram=3, t_num=4, t_den=5
-    ).count()
-    sec_direct_cand = round(time.perf_counter() - t0, 4)
+    with cache_scope(spark):
+        # Direct path: what the verify stage WOULD have to process on the
+        # inflated corpus. Candidates only — the full verify is the 32x
+        # §25b row and is exactly what the guardrail exists to avoid.
+        t0 = time.perf_counter()
+        cand_direct = dd_ops.containment_candidate_pairs(
+            fam, "doc_id", "text", ngram=3, t_num=4, t_den=5
+        ).count()
+        sec_direct_cand = round(time.perf_counter() - t0, 4)
 
-    # Theorem floor input: candidates on the UNINFLATED base corpus
-    # (every base pair lifts to replicas^2 inflated pairs).
-    cand_base = dd_ops.containment_candidate_pairs(
-        d, "doc_id", "text", ngram=3, t_num=4, t_den=5
-    ).count()
+        # Theorem floor input: candidates on the UNINFLATED base corpus
+        # (every base pair lifts to replicas^2 inflated pairs).
+        cand_base = dd_ops.containment_candidate_pairs(
+            d, "doc_id", "text", ngram=3, t_num=4, t_den=5
+        ).count()
 
-    # Guardrail path: canonicalize (LSH -> CC -> longest-doc survivor)
-    # then candidates + exact verify over survivors only.
-    t0 = time.perf_counter()
-    manifest = dd_ops.canonicalize_near_dup_clusters(
-        fam, "doc_id", "text", "n_chars"
-    )
-    reps = fam.join(
-        manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    ).persist()
-    n_canonical = reps.count()
-    cand_canon = dd_ops.containment_candidate_pairs(
-        reps, "doc_id", "text", ngram=3, t_num=4, t_den=5
-    ).count()
-    pairs_canon = dd_ops.prefix_filter_containment_pairs(
-        dd_ops.containment_probe_corpus(reps, "doc_id", "text"),
-        "doc_id", "text", ngram=3, t_num=4, t_den=5,
-    ).persist()
-    n_pairs_canon = pairs_canon.count()
-    sec_guardrail = round(time.perf_counter() - t0, 4)
+        # Guardrail path: canonicalize (LSH -> CC -> longest-doc survivor)
+        # then candidates + exact verify over survivors only.
+        t0 = time.perf_counter()
+        manifest = dd_ops.canonicalize_near_dup_clusters(
+            fam, "doc_id", "text", "n_chars"
+        )
+        reps = persist(fam.join(
+            manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        ))
+        n_canonical = reps.count()
+        cand_canon = dd_ops.containment_candidate_pairs(
+            reps, "doc_id", "text", ngram=3, t_num=4, t_den=5
+        ).count()
+        pairs_canon = persist(dd_ops.prefix_filter_containment_pairs(
+            dd_ops.containment_probe_corpus(reps, "doc_id", "text"),
+            "doc_id", "text", ngram=3, t_num=4, t_den=5,
+        ))
+        n_pairs_canon = pairs_canon.count()
+        sec_guardrail = round(time.perf_counter() - t0, 4)
 
-    # Identity: the guardrail's final pairs on the INFLATED corpus must
-    # equal the canonical-first pairs on the BASE corpus exactly (both
-    # directions of exceptAll; counts already taken double as the
-    # cardinality side).
-    base_manifest = dd_ops.canonicalize_near_dup_clusters(
-        d, "doc_id", "text", "n_chars"
-    )
-    base_reps = d.join(
-        base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    base_pairs = dd_ops.prefix_filter_containment_pairs(
-        dd_ops.containment_probe_corpus(base_reps, "doc_id", "text"),
-        "doc_id", "text", ngram=3, t_num=4, t_den=5,
-    ).persist()
-    n_base_pairs = base_pairs.count()
-    _require(
-        n_base_pairs > 0,
-        "identity check is vacuous: base canonical+probe corpus "
-        "produced 0 containment pairs",
-    )
-    _require(
-        n_pairs_canon == n_base_pairs,
-        f"guardrail pair count diverged: {n_pairs_canon} inflated vs "
-        f"{n_base_pairs} base",
-    )
-    diff = pairs_canon.exceptAll(base_pairs).count()
-    _require(
-        diff == 0,
-        f"guardrail pairs diverge from base canonical pairs: {diff} rows",
-    )
-    floor = replicas * replicas * cand_base
-    _require(
-        cand_direct >= floor,
-        f"copy-lift below the replicas^2 theorem floor: {cand_direct} < "
-        f"{replicas}^2 * {cand_base} (base-corpus candidates)",
-    )
-    pairs_canon.unpersist()
-    base_pairs.unpersist()
-    reps.unpersist()
+        # Identity: the guardrail's final pairs on the INFLATED corpus must
+        # equal the canonical-first pairs on the BASE corpus exactly (both
+        # directions of exceptAll; counts already taken double as the
+        # cardinality side).
+        base_manifest = dd_ops.canonicalize_near_dup_clusters(
+            d, "doc_id", "text", "n_chars"
+        )
+        base_reps = d.join(
+            base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        )
+        base_pairs = persist(dd_ops.prefix_filter_containment_pairs(
+            dd_ops.containment_probe_corpus(base_reps, "doc_id", "text"),
+            "doc_id", "text", ngram=3, t_num=4, t_den=5,
+        ))
+        n_base_pairs = base_pairs.count()
+        _require(
+            n_base_pairs > 0,
+            "identity check is vacuous: base canonical+probe corpus "
+            "produced 0 containment pairs",
+        )
+        _require(
+            n_pairs_canon == n_base_pairs,
+            f"guardrail pair count diverged: {n_pairs_canon} inflated vs "
+            f"{n_base_pairs} base",
+        )
+        diff = pairs_canon.exceptAll(base_pairs).count()
+        _require(
+            diff == 0,
+            f"guardrail pairs diverge from base canonical pairs: {diff} rows",
+        )
+        floor = replicas * replicas * cand_base
+        _require(
+            cand_direct >= floor,
+            f"copy-lift below the replicas^2 theorem floor: {cand_direct} < "
+            f"{replicas}^2 * {cand_base} (base-corpus candidates)",
+        )
     return {
         "docs": n_docs * replicas,
         "replicas": replicas,
@@ -1158,73 +1157,71 @@ def run_jaccard_guardrail_strain(
         "n_chars",
     )
 
-    # Direct path on the inflated corpus: the §26 output-bound join.
-    t0 = time.perf_counter()
-    pairs_direct = dd.prefix_filter_jaccard_pairs(
-        fam, "doc_id", "text", 4, 5
-    ).count()
-    sec_direct = round(time.perf_counter() - t0, 4)
+    with cache_scope(spark):
+        # Direct path on the inflated corpus: the §26 output-bound join.
+        t0 = time.perf_counter()
+        pairs_direct = dd.prefix_filter_jaccard_pairs(
+            fam, "doc_id", "text", 4, 5
+        ).count()
+        sec_direct = round(time.perf_counter() - t0, 4)
 
-    # Base-corpus direct pairs: the replicas^2 floor input.
-    pairs_base_direct = dd.prefix_filter_jaccard_pairs(
-        d, "doc_id", "text", 4, 5
-    ).count()
-    _require(
-        pairs_direct >= replicas * replicas * pairs_base_direct,
-        f"copy-lift below the replicas^2 output floor: {pairs_direct} "
-        f"< {replicas}^2 * {pairs_base_direct}",
-    )
+        # Base-corpus direct pairs: the replicas^2 floor input.
+        pairs_base_direct = dd.prefix_filter_jaccard_pairs(
+            d, "doc_id", "text", 4, 5
+        ).count()
+        _require(
+            pairs_direct >= replicas * replicas * pairs_base_direct,
+            f"copy-lift below the replicas^2 output floor: {pairs_direct} "
+            f"< {replicas}^2 * {pairs_base_direct}",
+        )
 
-    # Guardrail path: canonicalize the INFLATED corpus, then the exact
-    # prefix-filtered join over survivors only (the registry entry's
-    # composition).
-    t0 = time.perf_counter()
-    manifest = dd.canonicalize_near_dup_clusters(
-        fam, "doc_id", "text", "n_chars"
-    )
-    reps = fam.join(
-        manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    ).persist()
-    n_canonical = reps.count()
-    pairs_canon = dd.prefix_filter_jaccard_pairs(
-        reps, "doc_id", "text", 4, 5
-    ).persist()
-    n_pairs_canon = pairs_canon.count()
-    sec_guardrail = round(time.perf_counter() - t0, 4)
+        # Guardrail path: canonicalize the INFLATED corpus, then the exact
+        # prefix-filtered join over survivors only (the registry entry's
+        # composition).
+        t0 = time.perf_counter()
+        manifest = dd.canonicalize_near_dup_clusters(
+            fam, "doc_id", "text", "n_chars"
+        )
+        reps = persist(fam.join(
+            manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        ))
+        n_canonical = reps.count()
+        pairs_canon = persist(dd.prefix_filter_jaccard_pairs(
+            reps, "doc_id", "text", 4, 5
+        ))
+        n_pairs_canon = pairs_canon.count()
+        sec_guardrail = round(time.perf_counter() - t0, 4)
 
-    # Identity vs the base corpus's canonical-first run (non-empty).
-    base_manifest = dd.canonicalize_near_dup_clusters(
-        d, "doc_id", "text", "n_chars"
-    )
-    base_reps = d.join(
-        base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    base_pairs = dd.prefix_filter_jaccard_pairs(
-        base_reps, "doc_id", "text", 4, 5
-    ).persist()
-    n_base_pairs = base_pairs.count()
-    _require(
-        n_base_pairs > 0,
-        "identity check is vacuous: base canonical corpus produced 0 "
-        "Jaccard pairs",
-    )
-    _require(
-        n_pairs_canon == n_base_pairs,
-        f"guardrail pair count diverged: {n_pairs_canon} inflated vs "
-        f"{n_base_pairs} base",
-    )
-    diff = pairs_canon.exceptAll(base_pairs).count()
-    _require(
-        diff == 0,
-        f"guardrail pairs diverge from base canonical pairs: {diff} rows",
-    )
-    pairs_canon.unpersist()
-    base_pairs.unpersist()
-    reps.unpersist()
+        # Identity vs the base corpus's canonical-first run (non-empty).
+        base_manifest = dd.canonicalize_near_dup_clusters(
+            d, "doc_id", "text", "n_chars"
+        )
+        base_reps = d.join(
+            base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        )
+        base_pairs = persist(dd.prefix_filter_jaccard_pairs(
+            base_reps, "doc_id", "text", 4, 5
+        ))
+        n_base_pairs = base_pairs.count()
+        _require(
+            n_base_pairs > 0,
+            "identity check is vacuous: base canonical corpus produced 0 "
+            "Jaccard pairs",
+        )
+        _require(
+            n_pairs_canon == n_base_pairs,
+            f"guardrail pair count diverged: {n_pairs_canon} inflated vs "
+            f"{n_base_pairs} base",
+        )
+        diff = pairs_canon.exceptAll(base_pairs).count()
+        _require(
+            diff == 0,
+            f"guardrail pairs diverge from base canonical pairs: {diff} rows",
+        )
     return {
         "docs": n_docs * replicas,
         "replicas": replicas,
@@ -1288,96 +1285,90 @@ def run_triangle_guardrail_strain(
         "n_chars",
     )
 
-    # Base graph statistics for the closed-form lift.
-    base_pairs = dd.lsh_candidate_pairs(d, "doc_id", "text", 8, 4).persist()
-    e_base = base_pairs.count()
-    t_base = triangle_count_oriented(base_pairs).first()[0]
+    with cache_scope(spark):
+        # Base graph statistics for the closed-form lift.
+        base_pairs = persist(dd.lsh_candidate_pairs(d, "doc_id", "text", 8, 4))
+        e_base = base_pairs.count()
+        t_base = triangle_count_oriented(base_pairs).first()[0]
 
-    # Direct path on the inflated corpus.
-    t0 = time.perf_counter()
-    direct_pairs = dd.lsh_candidate_pairs(fam, "doc_id", "text", 8, 4)
-    direct_pairs = dd.narrow_persisted(direct_pairs, "doc_a")
-    t_direct = triangle_count_oriented(direct_pairs).first()[0]
-    sec_direct = round(time.perf_counter() - t0, 4)
+        # Direct path on the inflated corpus.
+        t0 = time.perf_counter()
+        direct_pairs = dd.lsh_candidate_pairs(fam, "doc_id", "text", 8, 4)
+        direct_pairs = dd.narrow_persisted(direct_pairs, "doc_a")
+        t_direct = triangle_count_oriented(direct_pairs).first()[0]
+        sec_direct = round(time.perf_counter() - t0, 4)
 
-    r = replicas
-    c_r2 = r * (r - 1) // 2
-    c_r3 = r * (r - 1) * (r - 2) // 6
-    expected_direct = t_base * r**3 + e_base * 2 * r * c_r2 + n_docs * c_r3
-    _require(
-        t_direct == expected_direct,
-        f"clique-lift closed form broken: direct {t_direct} != "
-        f"T*r^3 + E*2r*C(r,2) + N*C(r,3) = {expected_direct}",
-    )
+        r = replicas
+        c_r2 = r * (r - 1) // 2
+        c_r3 = r * (r - 1) * (r - 2) // 6
+        expected_direct = t_base * r**3 + e_base * 2 * r * c_r2 + n_docs * c_r3
+        _require(
+            t_direct == expected_direct,
+            f"clique-lift closed form broken: direct {t_direct} != "
+            f"T*r^3 + E*2r*C(r,2) + N*C(r,3) = {expected_direct}",
+        )
 
-    # Guardrail path on the inflated corpus.
-    t0 = time.perf_counter()
-    manifest = dd.canonicalize_near_dup_clusters(
-        fam, "doc_id", "text", "n_chars"
-    ).persist()
-    reps = fam.join(
-        manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    surv_pairs = dd.lsh_candidate_pairs(reps, "doc_id", "text", 8, 8)
-    surv_pairs = dd.narrow_persisted(surv_pairs, "doc_a")
-    t_canon = triangle_count_oriented(surv_pairs).first()[0]
-    fam_tri = manifest.agg(
-        F.coalesce(
-            F.sum(
-                F.expr("n_members * (n_members - 1) * (n_members - 2) DIV 6")
-            ),
-            F.lit(0),
-        ).cast("long")
-    ).first()[0]
-    sec_guardrail = round(time.perf_counter() - t0, 4)
-
-    # Survivor sets of inflated and base are equal, so the survivor
-    # graph (and its triangles) must match the BASE canonical run; the
-    # within-family term must equal sum C(k*r, 3) over base components.
-    base_manifest = dd.canonicalize_near_dup_clusters(
-        d, "doc_id", "text", "n_chars"
-    )
-    base_reps = d.join(
-        base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    base_surv_pairs = dd.lsh_candidate_pairs(
-        base_reps, "doc_id", "text", 8, 8
-    )
-    t_canon_base = triangle_count_oriented(base_surv_pairs).first()[0]
-    _require(
-        t_canon == t_canon_base,
-        f"survivor-graph triangles diverged: {t_canon} inflated vs "
-        f"{t_canon_base} base",
-    )
-    expected_fam = (
-        base_manifest.agg(
+        # Guardrail path on the inflated corpus.
+        t0 = time.perf_counter()
+        manifest = persist(dd.canonicalize_near_dup_clusters(
+            fam, "doc_id", "text", "n_chars"
+        ))
+        reps = fam.join(
+            manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        )
+        surv_pairs = dd.lsh_candidate_pairs(reps, "doc_id", "text", 8, 8)
+        surv_pairs = dd.narrow_persisted(surv_pairs, "doc_a")
+        t_canon = triangle_count_oriented(surv_pairs).first()[0]
+        fam_tri = manifest.agg(
             F.coalesce(
                 F.sum(
-                    F.expr(
-                        f"(n_members * {r}) * (n_members * {r} - 1) "
-                        f"* (n_members * {r} - 2) DIV 6"
-                    )
+                    F.expr("n_members * (n_members - 1) * (n_members - 2) DIV 6")
                 ),
                 F.lit(0),
             ).cast("long")
         ).first()[0]
-    )
-    _require(
-        fam_tri == expected_fam,
-        f"within-family analytic count diverged: {fam_tri} != "
-        f"sum C(k*{r}, 3) = {expected_fam}",
-    )
-    base_pairs.unpersist()
-    manifest.unpersist()
-    # direct_pairs is the largest frame in the run (the clique-lifted
-    # candidate table); release both narrow_persisted caches instead of
-    # leaving them to LRU eviction (ADVICE r15).
-    direct_pairs.unpersist()
-    surv_pairs.unpersist()
+        sec_guardrail = round(time.perf_counter() - t0, 4)
+
+        # Survivor sets of inflated and base are equal, so the survivor
+        # graph (and its triangles) must match the BASE canonical run; the
+        # within-family term must equal sum C(k*r, 3) over base components.
+        base_manifest = dd.canonicalize_near_dup_clusters(
+            d, "doc_id", "text", "n_chars"
+        )
+        base_reps = d.join(
+            base_manifest.select(F.col("canonical_doc_id").alias("doc_id")),
+            "doc_id",
+            "left_semi",
+        )
+        base_surv_pairs = dd.lsh_candidate_pairs(
+            base_reps, "doc_id", "text", 8, 8
+        )
+        t_canon_base = triangle_count_oriented(base_surv_pairs).first()[0]
+        _require(
+            t_canon == t_canon_base,
+            f"survivor-graph triangles diverged: {t_canon} inflated vs "
+            f"{t_canon_base} base",
+        )
+        expected_fam = (
+            base_manifest.agg(
+                F.coalesce(
+                    F.sum(
+                        F.expr(
+                            f"(n_members * {r}) * (n_members * {r} - 1) "
+                            f"* (n_members * {r} - 2) DIV 6"
+                        )
+                    ),
+                    F.lit(0),
+                ).cast("long")
+            ).first()[0]
+        )
+        _require(
+            fam_tri == expected_fam,
+            f"within-family analytic count diverged: {fam_tri} != "
+            f"sum C(k*{r}, 3) = {expected_fam}",
+        )
     return {
         "docs": n_docs * replicas,
         "replicas": replicas,
@@ -1438,72 +1429,71 @@ def run_lcc_second_pass_strain(
         "n_chars",
     )
 
-    base_manifest = dd.canonicalize_near_dup_clusters(
-        d, "doc_id", "text", "n_chars"
-    ).persist()
-    t0 = time.perf_counter()
-    infl_manifest = dd.canonicalize_near_dup_clusters(
-        fam, "doc_id", "text", "n_chars"
-    ).persist()
-    n_surv_infl = infl_manifest.count()
-    sec_canonicalize_infl = round(time.perf_counter() - t0, 4)
+    with cache_scope(spark):
+        base_manifest = persist(dd.canonicalize_near_dup_clusters(
+            d, "doc_id", "text", "n_chars"
+        ))
+        t0 = time.perf_counter()
+        infl_manifest = persist(dd.canonicalize_near_dup_clusters(
+            fam, "doc_id", "text", "n_chars"
+        ))
+        n_surv_infl = infl_manifest.count()
+        sec_canonicalize_infl = round(time.perf_counter() - t0, 4)
 
-    # Survivor-set equality: the copy groups must vanish into their
-    # originals' families, leaving exactly the base survivors.
-    surv_base = base_manifest.select("canonical_doc_id")
-    surv_infl = infl_manifest.select("canonical_doc_id")
-    _require(
-        surv_base.exceptAll(surv_infl).count() == 0
-        and surv_infl.exceptAll(surv_base).count() == 0,
-        "inflated survivor set diverged from base",
-    )
+        # Survivor-set equality: the copy groups must vanish into their
+        # originals' families, leaving exactly the base survivors.
+        surv_base = base_manifest.select("canonical_doc_id")
+        surv_infl = infl_manifest.select("canonical_doc_id")
+        _require(
+            surv_base.exceptAll(surv_infl).count() == 0
+            and surv_infl.exceptAll(surv_base).count() == 0,
+            "inflated survivor set diverged from base",
+        )
 
-    delta_base = lcc_second_pass_delta(
-        d, base_manifest, threshold_milli=threshold_milli
-    ).persist()
-    n_base = delta_base.count()
-    _require(
-        n_base > 0,
-        "strain is vacuous: base corpus produced an empty second-pass "
-        "delta",
-    )
-    t0 = time.perf_counter()
-    delta_infl = lcc_second_pass_delta(
-        fam, infl_manifest, threshold_milli=threshold_milli
-    ).persist()
-    n_infl = delta_infl.count()
-    sec_second_pass_infl = round(time.perf_counter() - t0, 4)
+        delta_base = persist(lcc_second_pass_delta(
+            d, base_manifest, threshold_milli=threshold_milli
+        ))
+        n_base = delta_base.count()
+        _require(
+            n_base > 0,
+            "strain is vacuous: base corpus produced an empty second-pass "
+            "delta",
+        )
+        t0 = time.perf_counter()
+        delta_infl = persist(lcc_second_pass_delta(
+            fam, infl_manifest, threshold_milli=threshold_milli
+        ))
+        n_infl = delta_infl.count()
+        sec_second_pass_infl = round(time.perf_counter() - t0, 4)
 
-    # Row-for-row identity after rescaling the one mass column.
-    # Divisibility is itself part of the theorem (ADVICE r16): float
-    # division + cast('long') TRUNCATES, so an inflated n_docs_total
-    # wrong by a non-multiple (10 instead of 9 at replicas=3) would
-    # rescale to the base value and the exceptAll identity would pass
-    # on exactly the divergence this strain exists to catch. Assert
-    # exact divisibility first, then rescale with integer DIV.
-    n_indivisible = delta_infl.filter(
-        F.col("n_docs_total") % replicas != 0
-    ).count()
-    _require(
-        n_indivisible == 0,
-        f"inflated n_docs_total not divisible by replicas={replicas} "
-        f"on {n_indivisible} delta rows — mass did not scale linearly",
-    )
-    rescaled = delta_infl.withColumn(
-        "n_docs_total",
-        F.expr(f"n_docs_total DIV {int(replicas)}"),
-    )
-    diff = (
-        delta_base.exceptAll(rescaled).count()
-        + rescaled.exceptAll(delta_base).count()
-    )
-    _require(
-        diff == 0,
-        f"second-pass delta diverged from base after /{replicas} "
-        f"n_docs_total rescale: {diff} rows",
-    )
-    for fr in (base_manifest, infl_manifest, delta_base, delta_infl):
-        fr.unpersist()
+        # Row-for-row identity after rescaling the one mass column.
+        # Divisibility is itself part of the theorem (ADVICE r16): float
+        # division + cast('long') TRUNCATES, so an inflated n_docs_total
+        # wrong by a non-multiple (10 instead of 9 at replicas=3) would
+        # rescale to the base value and the exceptAll identity would pass
+        # on exactly the divergence this strain exists to catch. Assert
+        # exact divisibility first, then rescale with integer DIV.
+        n_indivisible = delta_infl.filter(
+            F.col("n_docs_total") % replicas != 0
+        ).count()
+        _require(
+            n_indivisible == 0,
+            f"inflated n_docs_total not divisible by replicas={replicas} "
+            f"on {n_indivisible} delta rows — mass did not scale linearly",
+        )
+        rescaled = delta_infl.withColumn(
+            "n_docs_total",
+            F.expr(f"n_docs_total DIV {int(replicas)}"),
+        )
+        diff = (
+            delta_base.exceptAll(rescaled).count()
+            + rescaled.exceptAll(delta_base).count()
+        )
+        _require(
+            diff == 0,
+            f"second-pass delta diverged from base after /{replicas} "
+            f"n_docs_total rescale: {diff} rows",
+        )
     return {
         "docs": n_docs * replicas,
         "replicas": replicas,

@@ -97,7 +97,8 @@ def test_pipeline_commit_reads_input_once(
     """split_stats aggregates the persisted spine: during the commit the
     JSONL input is scanned by the corpus write's SQL execution only
     (unpersisted, the split_stats write re-ran ingest -> dedup), and the
-    spine is released once the commit returns."""
+    spine and every other cache the pipeline built (the LSH band table
+    among them) are released once the commit returns."""
     n_lines = sum(
         len(open(os.path.join(jsonl_shards, f)).read().splitlines())
         for f in os.listdir(jsonl_shards)
@@ -117,8 +118,10 @@ def test_pipeline_commit_reads_input_once(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     persisted = _spy_persist(spark, monkeypatch)
+    n_cached = sc._jsc.getPersistentRDDs().size()
     stats = build_training_corpus(spark, jsonl_shards, str(tmp_path / "pub"))
     assert stats["n_input"] == 501  # the Observation fired exactly once
+    assert sc._jsc.getPersistentRDDs().size() == n_cached
 
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
@@ -148,7 +151,8 @@ def test_pipeline_failed_commit_releases_spine(
     spark, jsonl_shards, tmp_path, monkeypatch
 ):
     """A commit that raises after the spine was materialized (the
-    split_stats write fails) still releases the persisted spine."""
+    split_stats write fails) still releases the persisted spine and
+    every other cache the pipeline built."""
     real_parquet = DataFrameWriter.parquet
 
     def parquet(self, path, *args, **kwargs):
@@ -159,9 +163,11 @@ def test_pipeline_failed_commit_releases_spine(
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     persisted = _spy_persist(spark, monkeypatch)
     root = str(tmp_path / "pub")
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(OSError, match="injected"):
         build_training_corpus(spark, jsonl_shards, root)
     assert _spine(persisted).storageLevel == StorageLevel.NONE
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
     assert manifest.current_manifest(root) is None  # nothing published
 
 

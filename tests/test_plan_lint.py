@@ -20,6 +20,9 @@ registry so no future entry can reintroduce them silently:
   the shingle builders. Such values are bound once with
   ``functions.text.let``.
 
+One source lint rides along: every DataFrame cache in the package goes
+through ``etl_tj_project_spark/cache.py``, so each one has an owner.
+
 Planning all entries costs ~1.5 min at sf0.001 (a handful of entries
 run bounded construction-time jobs); it is the price of making "no
 scale-killers, plan-asserted" a registry-wide invariant instead of a
@@ -28,6 +31,8 @@ per-query promise.
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -236,3 +241,39 @@ def test_lambda_capture_walk_sees_cached_and_bound_forms(spark):
     assert "lambdafunction" in plan.toString()
     assert _lambda_captures(plan) == []
     assert bound.first()[0] == captured.first()[0] == ["a", "b", " "]
+
+
+# Connected components' checkpoint blocks are not recomputable, so they
+# are freed by RDD id, not through the cache module.
+_CACHE_CALL_ALLOWED = {("operators/dedup.py", "_unpersist_rdd_ids")}
+
+
+def test_dataframe_caches_go_through_cache_module():
+    """No ``.persist(``, ``.unpersist(`` or ``.cache()`` call in the
+    package outside ``cache.py``, except the CC checkpoint release."""
+    import etl_tj_project_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found: list[tuple[str, str, int]] = []
+
+    def walk(node, rel: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("persist", "unpersist", "cache")
+            ):
+                found.append((rel, fn, child.lineno))
+            walk(child, rel, name)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel != "cache.py":
+            walk(ast.parse(path.read_text()), rel, "")
+    bad = [f for f in found if f[:2] not in _CACHE_CALL_ALLOWED]
+    assert not bad, bad
+    # The exemption is live, not stale.
+    assert {f[:2] for f in found} == _CACHE_CALL_ALLOWED

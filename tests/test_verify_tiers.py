@@ -127,3 +127,42 @@ def test_bitset_multiword_boundary(spark, monkeypatch):
     # sanity: pairs spanning both words survive (J(1,2)=63/70,
     # J(1,3)=10/70, J(3,4)=6/10 — all >= 1/10; J(1,4)=6/70 is not).
     assert {(r[0], r[1]) for r in got} == {(1, 2), (1, 3), (3, 4)}
+
+
+def test_overwritten_input_gets_a_fresh_vocabulary_count(spark, tmp_path):
+    """The verify tier is sized from the vocabulary of the data as it is
+    now. A parquet path overwritten through Spark with a larger
+    vocabulary (term ids past the first 64-bit word) must give the same
+    pairs as a fresh build over the same rows; a count remembered from
+    the first 9-term run sized the bitset at one word and dropped them."""
+    path = str(tmp_path / "docs.parquet")
+    schema = "doc_id long, text string"
+    small = [(1, "a b c d e f"), (2, "a b c d e g"), (3, "g h i")]
+    spark.createDataFrame(small, schema).write.mode("overwrite").parquet(path)
+    first = _rows(
+        dd.prefix_filter_jaccard_pairs(
+            spark.read.parquet(path), "doc_id", "text"
+        )
+    )
+    assert [r[:2] for r in first] == [(1, 2)]
+
+    # Two near-duplicates over df-2 terms (which sort after every df-1
+    # filler term, so their ids exceed 300) plus 300 filler terms.
+    shared = " ".join(f"s{i}" for i in range(7))
+    big = [(1, shared + " u1"), (2, shared + " u2")] + [
+        (10 + d, " ".join(f"f{d:02d}x{i:02d}" for i in range(10)))
+        for d in range(30)
+    ]
+    spark.createDataFrame(big, schema).write.mode("overwrite").parquet(path)
+    again = _rows(
+        dd.prefix_filter_jaccard_pairs(
+            spark.read.parquet(path), "doc_id", "text"
+        )
+    )
+    fresh = _rows(
+        dd.prefix_filter_jaccard_pairs(
+            spark.createDataFrame(big, schema), "doc_id", "text"
+        )
+    )
+    assert fresh == [(1, 2, 7, 8, 8, 0.777778)]
+    assert again == fresh

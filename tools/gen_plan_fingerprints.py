@@ -35,7 +35,7 @@ def fingerprint(plan: str) -> list[str]:
 
 
 # Entries whose plan depends on the session's CACHE STATE (the LSH
-# family persists its band/signature tables via _persist_once; whether
+# family persists its band/signature tables via cache.persist; whether
 # an InMemoryTableScan appears, and where, depends on which OTHER
 # queries ran first in the session). Their shapes are pinned by the
 # dedicated tests in test_scale_plans.py instead; the fingerprint guard
@@ -44,7 +44,7 @@ CACHE_SENSITIVE = {
     "dedup_minhash_lsh",
     "dedup_incremental_lsh_candidates",
     # Round 14: the PPJoin rewrite persists postings + prefixes via
-    # _persist_once, so whether downstream joins read an
+    # cache.persist, so whether downstream joins read an
     # InMemoryTableScan (and which side broadcasts) depends on which
     # OTHER tests cached frames first in the shared suite session.
     # Correctness is pinned by the brute-force completeness tests
@@ -96,7 +96,8 @@ def snapshot(spark) -> dict[str, list[str]]:
             .toString()
         )
         # First construction may populate operator-internal caches
-        # (_persist_once) whose presence changes later plans
+        # (cache.persist; session-owned, as no cache_scope is open here)
+        # whose presence changes later plans
         # (InMemoryTableScan); fingerprint the STEADY state.
         build()
         fps[name] = fingerprint(build())

@@ -32,25 +32,22 @@ con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+from etl_tj_project_spark.cache import cache_scope
 from tests.oracle_compare import compare
 
 q, o = m.queries(), m.oracle_sql()
 fails = []
-for i, (name, fn) in enumerate(q.items()):
-    # Cohort-boundary cache hygiene (ADVICE r14): _persist_once-cached
-    # frames are deliberately never unpersisted by operators (composed
-    # lazy consumers may still read them), so a 280+-entry session
-    # accretes executor cache bounded only by LRU eviction. Clearing
-    # every 50 entries keeps the replay's memory profile flat without
-    # perturbing any single entry's internal cache reuse.
-    if i and i % 50 == 0:
-        spark.catalog.clearCache()
+for name, fn in q.items():
+    # One cache scope per entry: the frames an entry's builder caches
+    # are read by its comparison and released right after it, so the
+    # session's cache stays flat across the replay.
     try:
-        sdf = fn(spark, sf)
-        if name in o:
-            compare(sdf, con, o[name])
-        else:
-            sdf.collect()
+        with cache_scope(spark):
+            sdf = fn(spark, sf)
+            if name in o:
+                compare(sdf, con, o[name])
+            else:
+                sdf.collect()
         print("RESULT OK", name, flush=True)
     except Exception as e:
         fails.append(name)
