@@ -7,11 +7,12 @@ Airflow DAG runs, as plain commands:
     python -m etl_tj_project_spark.cli backfill --start 2025-07-01 \
         --end 2025-07-31 --data-dir DATA --warehouse WH
 
-``run-daily`` is DAG 2 for one logical date (reads raw transaction CSVs
-from ``--data-dir``, dims from the warehouse, writes the three aggregates
-with dynamic partition overwrite); ``backfill`` loops it over a date range
-(the reference's ``catchup`` equivalent — each day is independently
-idempotent, so a crashed backfill just re-runs). On a cluster, submit this
+``run-daily`` is DAG 2 for one logical date (stages the raw transaction
+CSVs from ``--data-dir``, reads dims from the warehouse, writes the three
+aggregates with dynamic partition overwrite); ``backfill`` loops it over a
+date range (the reference's ``catchup`` equivalent — each day is
+independently idempotent, so a crashed backfill just re-runs), staging the
+CSVs once for the whole range. On a cluster, submit this
 module via ``spark-submit``; locally it builds a ``local[*]`` session.
 """
 
@@ -22,6 +23,7 @@ import datetime as dt
 import sys
 
 from etl_tj_project_spark import io as lake_io
+from etl_tj_project_spark.cache import cache_scope
 from etl_tj_project_spark.plans import daily
 from etl_tj_project_spark.session import get_spark
 
@@ -33,14 +35,13 @@ def _dims_from_warehouse(spark, wh: daily.Warehouse):
     }
 
 
-def _run_daily(spark, ds: str, data_dir: str, wh: daily.Warehouse) -> dict[str, int]:
-    bus_raw, halte_raw = daily.raw_trx_from_csv(spark, data_dir)
-    dims = _dims_from_warehouse(spark, wh)
+def _run_daily(spark, ds: str, trx, dims, wh: daily.Warehouse) -> dict[str, int]:
+    bus, halte = trx
     out = daily.run_daily(
         spark,
         ds,
-        bus_raw=bus_raw,
-        halte_raw=halte_raw,
+        bus_raw=bus,
+        halte_raw=halte,
         routes=dims["routes"],
         realisasi_bus=dims["realisasi_bus"],
         shelter_corridor=dims["shelter_corridor"],
@@ -125,18 +126,24 @@ def main(argv: list[str] | None = None) -> int:
             dims = daily.load_dims(spark, args.data_dir, wh)
             for name, df in dims.items():
                 print(f"{name}: {df.count()} rows")
-        elif args.cmd == "run-daily":
-            counts = _run_daily(spark, args.ds, args.data_dir, wh)
-            for name, n in counts.items():
-                print(f"{name}[{args.ds}]: {n} rows")
-        elif args.cmd == "backfill":
-            d = dt.date.fromisoformat(args.start)
-            end = dt.date.fromisoformat(args.end)
-            while d <= end:
-                counts = _run_daily(spark, d.isoformat(), args.data_dir, wh)
-                total = sum(counts.values())
-                print(f"{d.isoformat()}: {total} aggregate rows")
-                d += dt.timedelta(days=1)
+        elif args.cmd in ("run-daily", "backfill"):
+            # One staged snapshot of the CSVs and one read of the dims serve
+            # every day; the scope releases the snapshot when the command ends.
+            with cache_scope(spark):
+                trx = daily.raw_trx_from_csv(spark, args.data_dir)
+                dims = _dims_from_warehouse(spark, wh)
+                if args.cmd == "run-daily":
+                    counts = _run_daily(spark, args.ds, trx, dims, wh)
+                    for name, n in counts.items():
+                        print(f"{name}[{args.ds}]: {n} rows")
+                else:
+                    d = dt.date.fromisoformat(args.start)
+                    end = dt.date.fromisoformat(args.end)
+                    while d <= end:
+                        counts = _run_daily(spark, d.isoformat(), trx, dims, wh)
+                        total = sum(counts.values())
+                        print(f"{d.isoformat()}: {total} aggregate rows")
+                        d += dt.timedelta(days=1)
         elif args.cmd == "query":
             from etl_tj_project_spark import harness
 

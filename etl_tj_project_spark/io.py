@@ -16,8 +16,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def write_partitioned(
@@ -30,6 +35,22 @@ def write_partitioned(
     ``partitionOverwriteMode=dynamic`` (set by session.tune) `overwrite`
     only replaces the partitions present in ``df``."""
     df.write.mode(mode).partitionBy(partition_col).parquet(path)
+
+
+def run_writes(spark: SparkSession, writes: Sequence[Callable[[], None]]) -> None:
+    """Run independent writes at once, one thread each.
+
+    Each thread starts with the caller's Spark local properties, so every
+    job it submits stays in the caller's job group. Returns only after
+    every write has finished, then raises the first failure in ``writes``
+    order: a caller that cleans up on error never races a running write.
+    """
+    if not writes:
+        return
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for f in futures:
+        f.result()
 
 
 def commit_partitions_atomic(
@@ -47,9 +68,13 @@ def commit_partitions_atomic(
 
     Phase 1 — stage (minutes, crash-safe): each DataFrame is written to
     a hidden ``.staging-{day}`` directory inside its table path (dot-
-    prefixed, so Spark/Hadoop readers never list it). A crash anywhere
-    in this phase leaves every table's visible state untouched; staging
-    residue is deleted on the way out and harmless if the process dies
+    prefixed, so Spark/Hadoop readers never list it). The writes are
+    independent, so they run concurrently through :func:`run_writes`
+    (each job in the caller's job group); one write's driver-side
+    planning and commit overlaps another's tasks. A failure in any write
+    (including a stray day) waits for the others to finish, then deletes
+    every staging directory and re-raises: every table's visible state is
+    untouched, and staging residue is harmless if the process dies
     before cleanup.
 
     Phase 2 — publish (milliseconds): for every table, the existing
@@ -68,39 +93,53 @@ def commit_partitions_atomic(
     A day with zero rows publishes as an absent partition (the staged
     write emits no partition directory).
 
-    ``_fail_after`` is a test hook: raise after that many staged writes
-    to exercise the crash path.
+    ``_fail_after`` is a test hook: a staged write raises once it makes
+    the count of completed staged writes reach that number, to exercise
+    the crash path.
     """
+    if not outputs:
+        return
+    spark = next(iter(outputs.values()))[0].sparkSession
     part = f"{partition_col}={day}"
     token = f".staging-{day}"
 
     def _staging(table_path: str) -> str:
         return os.path.join(table_path, token)
 
-    try:
-        done = 0
-        for _name, (df, table_path) in outputs.items():
-            staging = _staging(table_path)
-            shutil.rmtree(staging, ignore_errors=True)
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-            # The publish phase renames exactly one partition directory;
-            # rows for any OTHER day would be staged and then silently
-            # dropped — refuse instead.
-            stray = [
-                p
-                for p in os.listdir(staging)
-                if p.startswith(f"{partition_col}=") and p != part
-            ]
-            if stray:
-                raise ValueError(
-                    f"{_name}: DataFrame contains partitions beyond "
-                    f"{part}: {sorted(stray)} — commit_partitions_atomic "
-                    "publishes a single day; filter the input or commit "
-                    "each day separately"
-                )
+    done = 0
+    lock = threading.Lock()
+
+    def stage(name: str, df: DataFrame, table_path: str) -> None:
+        nonlocal done
+        staging = _staging(table_path)
+        shutil.rmtree(staging, ignore_errors=True)
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+        # The publish phase renames exactly one partition directory;
+        # rows for any OTHER day would be staged and then silently
+        # dropped — refuse instead.
+        stray = [
+            p
+            for p in os.listdir(staging)
+            if p.startswith(f"{partition_col}=") and p != part
+        ]
+        if stray:
+            raise ValueError(
+                f"{name}: DataFrame contains partitions beyond "
+                f"{part}: {sorted(stray)} — commit_partitions_atomic "
+                "publishes a single day; filter the input or commit "
+                "each day separately"
+            )
+        with lock:
             done += 1
-            if _fail_after is not None and done >= _fail_after:
-                raise RuntimeError("injected crash after staged write")
+            crash = _fail_after is not None and done >= _fail_after
+        if crash:
+            raise RuntimeError("injected crash after staged write")
+
+    try:
+        run_writes(
+            spark,
+            [partial(stage, name, df, path) for name, (df, path) in outputs.items()],
+        )
     except BaseException:
         for _name, (_df, table_path) in outputs.items():
             shutil.rmtree(_staging(table_path), ignore_errors=True)

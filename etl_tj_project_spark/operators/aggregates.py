@@ -14,8 +14,9 @@ Reference parity (dags/dag_datapelangan.py:172-234):
 Scale design: all three dims are broadcast (KB-sized even at 1000× —
 routes/corridors/fleet are bounded real-world sets), so the only shuffles
 are the three hash aggregations, each partial-aggregated map-side by
-Spark. The bus∪halte union is consumed by two aggregates — callers that
-fan out to all three sinks should cache it (plans/daily.py does).
+Spark. The bus∪halte union is consumed by two aggregates and the bus and
+halte inputs by all three; plans/daily.py caches those inputs (the staged
+typed month), so no sink rescans the source.
 
 Column semantics preserved: COUNT(*) → LongType `pelanggan_count`;
 SUM(decimal(18,2)) re-cast to decimal(18,2); NULL grouping keys form their

@@ -2,32 +2,35 @@
 
 * :func:`load_dims`  ≙ DAG 1 ``stage_csv_dims_to_pg_dwh``
   (CSV → all-string staging → typed dims → lake).
+* :func:`raw_trx_from_csv` / :func:`stage_trx` ≙ DAG 1's ``COPY`` of the
+  fact CSVs into staging plus the typed views over them: the month's
+  transactions are parsed and typed ONCE per backfill and cached.
 * :func:`run_daily`  ≙ DAG 2 ``dag_datapelangan``
-  (typed views → day+status filter → union/joins → three aggregates →
-  day-partitioned lake tables).
+  (staged typed views → day+status filter → union/joins → three
+  aggregates → day-partitioned lake tables).
 
 Where the reference hand-rolls optimization, Catalyst covers it (SURVEY
-§4): the dblink-inlined day/status filter becomes a declarative filter that
-pushes into the scan; the single-statement CTE chain that feeds three
-INSERTs at once becomes an explicit cache of the shared union (owned by the
-day's ``cache_scope``) — the one optimization Spark does NOT do
-automatically across actions.
+§4): the dblink-inlined day/status filter becomes a declarative filter
+over the staged frames. The reference's single-statement CTE chain that
+feeds three INSERTs at once needs no per-day cache here: every branch
+reads the staged month, which is already in memory, so a day re-reads no
+CSV.
 Cross-table atomicity (the reference commits all three aggregates in one
 transaction) maps to the staged-rename protocol in
-io.commit_partitions_atomic: stage all three day-partitions first, then
-publish with metadata renames only.
+io.commit_partitions_atomic: stage all three day-partitions first
+(concurrently), then publish with metadata renames only.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import nullcontext
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_tj_project_spark import io as lake_io
-from etl_tj_project_spark.cache import cache_scope, persist
+from etl_tj_project_spark.cache import persist
 from etl_tj_project_spark.operators import aggregates as agg
 from etl_tj_project_spark.operators import dims as dims_ops
 from etl_tj_project_spark.operators import projections as proj
@@ -75,14 +78,12 @@ def load_dims(spark: SparkSession, data_dir: str, wh: Warehouse) -> dict[str, Da
             REALISASI_BUS_STAGING,
         )
     )
-    lake_io.overwrite_table(routes, wh.dim("routes"))
-    lake_io.overwrite_table(shelter, wh.dim("shelter_corridor"))
-    lake_io.overwrite_table(realisasi, wh.dim("realisasi_bus"))
-    return {
-        "routes": lake_io.read_table(spark, wh.dim("routes")),
-        "shelter_corridor": lake_io.read_table(spark, wh.dim("shelter_corridor")),
-        "realisasi_bus": lake_io.read_table(spark, wh.dim("realisasi_bus")),
-    }
+    dims = {"routes": routes, "shelter_corridor": shelter, "realisasi_bus": realisasi}
+    lake_io.run_writes(
+        spark,
+        [partial(lake_io.overwrite_table, df, wh.dim(name)) for name, df in dims.items()],
+    )
+    return {name: lake_io.read_table(spark, wh.dim(name)) for name in dims}
 
 
 def run_daily(
@@ -98,45 +99,60 @@ def run_daily(
 ) -> dict[str, DataFrame]:
     """DAG 2 for one logical date ``ds`` ('YYYY-MM-DD').
 
+    ``bus_raw``/``halte_raw`` are the STAGED typed frames from
+    :func:`raw_trx_from_csv` or :func:`stage_trx`, not raw CSV frames.
+    The names predate staging and stay because callers pass them by
+    keyword (``perfbench/worker.py`` among them). This only filters them to
+    the day, so a backfill parses its CSVs once, not once per day.
+
     Returns the three aggregate DataFrames; when ``wh`` is given they are
-    also written with dynamic partition overwrite (idempotent re-runs);
-    without ``wh`` they read the union cache, which the caller then owns.
+    also written with dynamic partition overwrite (idempotent re-runs).
+    Nothing is cached per day: every branch reads the staged frames.
     """
     tune(spark)
-    bus = proj.filter_day_success(proj.vw_trx_bus(bus_raw), ds)
-    halte = proj.filter_day_success(proj.vw_trx_halte(halte_raw), ds)
+    bus = proj.filter_day_success(bus_raw, ds)
+    halte = proj.filter_day_success(halte_raw, ds)
 
-    # One cached pass feeds agg_by_card and agg_by_tariff (the reference's
-    # chained-CTE single-statement trick, ref dag_datapelangan.py:172-234).
-    with cache_scope(spark) if wh is not None else nullcontext():
-        unioned = persist(agg.union_trx(bus, halte))
-        by_card = agg.agg_by_card_from_union(unioned)
-        by_tariff = agg.agg_by_tariff_from_union(unioned)
-        by_route = agg.agg_by_route(
+    unioned = agg.union_trx(bus, halte)
+    out = {
+        "agg_by_card": agg.agg_by_card_from_union(unioned),
+        "agg_by_route": agg.agg_by_route(
             bus, halte, routes, realisasi_bus, shelter_corridor
+        ),
+        "agg_by_tariff": agg.agg_by_tariff_from_union(unioned),
+    }
+    if wh is not None:
+        lake_io.commit_partitions_atomic(
+            {name: (df, wh.agg(name)) for name, df in out.items()}, day=ds
         )
-        if wh is not None:
-            lake_io.commit_partitions_atomic(
-                {
-                    "agg_by_card": (by_card, wh.agg("agg_by_card")),
-                    "agg_by_route": (by_route, wh.agg("agg_by_route")),
-                    "agg_by_tariff": (by_tariff, wh.agg("agg_by_tariff")),
-                },
-                day=ds,
-            )
-        return {
-            "agg_by_card": by_card,
-            "agg_by_route": by_route,
-            "agg_by_tariff": by_tariff,
-        }
+    return out
+
+
+def stage_trx(bus_raw: DataFrame, halte_raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Type the raw bus/halte transactions once and cache them.
+
+    The caches belong to the caller's ``cache_scope``, or else to the
+    session (:mod:`..cache`); every :func:`run_daily` over them reads
+    memory, not the source.
+    """
+    return persist(proj.vw_trx_bus(bus_raw)), persist(proj.vw_trx_halte(halte_raw))
 
 
 def raw_trx_from_csv(spark: SparkSession, data_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Read the two raw transaction CSVs with all-string staging schemas."""
-    bus = read_csv_staging(
-        spark, os.path.join(data_dir, "dummy_transaksi_bus.csv"), TRANSAKSI_BUS_RAW
+    """Stage the two transaction CSVs: a fresh snapshot of each, typed and
+    cached by :func:`stage_trx`.
+
+    ``refreshByPath`` first invalidates whatever is cached over these
+    paths (an earlier call's snapshot), so a rewritten CSV is read anew
+    instead of being served from the old cache.
+    """
+    paths = [
+        os.path.join(data_dir, "dummy_transaksi_bus.csv"),
+        os.path.join(data_dir, "dummy_transaksi_halte.csv"),
+    ]
+    for path in paths:
+        spark.catalog.refreshByPath(path)
+    return stage_trx(
+        read_csv_staging(spark, paths[0], TRANSAKSI_BUS_RAW),
+        read_csv_staging(spark, paths[1], TRANSAKSI_HALTE_RAW),
     )
-    halte = read_csv_staging(
-        spark, os.path.join(data_dir, "dummy_transaksi_halte.csv"), TRANSAKSI_HALTE_RAW
-    )
-    return bus, halte

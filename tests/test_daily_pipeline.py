@@ -5,15 +5,28 @@ re-states the reference's documented semantics (SURVEY §2/§3) in SQL.
 
 from __future__ import annotations
 
+import os
+import threading
+
 import pytest
 
-from etl_tj_project_spark.functions.cleaning import norm_body_sql, to_bool_safe_sql
+from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
+
+from etl_tj_project_spark import io as lake_io
+from etl_tj_project_spark.cache import cache_scope
+from etl_tj_project_spark.functions.cleaning import (
+    norm_body,
+    norm_body_sql,
+    to_bool_safe_sql,
+)
 from etl_tj_project_spark.plans.daily import (
     Warehouse,
     load_dims,
     raw_trx_from_csv,
     run_daily,
 )
+from etl_tj_project_spark.schemas import TRANSAKSI_BUS_RAW, TRANSAKSI_HALTE_RAW
 from tests.gen_fixtures import generate
 from tests.oracle_compare import compare_pinned
 
@@ -97,20 +110,22 @@ def duck(data_dir):
 def pipeline_outputs(spark, data_dir, wh_dir):
     wh = Warehouse(wh_dir)
     dims = load_dims(spark, data_dir, wh)
-    bus_raw, halte_raw = raw_trx_from_csv(spark, data_dir)
-    out = {}
-    for ds in DS_LIST:
-        out[ds] = run_daily(
-            spark,
-            ds,
-            bus_raw=bus_raw,
-            halte_raw=halte_raw,
-            routes=dims["routes"],
-            realisasi_bus=dims["realisasi_bus"],
-            shelter_corridor=dims["shelter_corridor"],
-            wh=wh,
-        )
-    return out
+    # The staged CSVs live until the module's last test has read them.
+    with cache_scope(spark):
+        bus, halte = raw_trx_from_csv(spark, data_dir)
+        out = {}
+        for ds in DS_LIST:
+            out[ds] = run_daily(
+                spark,
+                ds,
+                bus_raw=bus,
+                halte_raw=halte,
+                routes=dims["routes"],
+                realisasi_bus=dims["realisasi_bus"],
+                shelter_corridor=dims["shelter_corridor"],
+                wh=wh,
+            )
+        yield out
 
 
 def _day_filter(view: str, ds: str) -> str:
@@ -203,12 +218,12 @@ def test_rerun_is_idempotent(spark, data_dir, wh_dir, pipeline_outputs):
     before = spark.read.parquet(f"{wh_dir}/dw/agg_by_card").count()
     wh = Warehouse(wh_dir)
     dims = load_dims(spark, data_dir, wh)
-    bus_raw, halte_raw = raw_trx_from_csv(spark, data_dir)
+    bus, halte = raw_trx_from_csv(spark, data_dir)
     run_daily(
         spark,
         DS_LIST[0],
-        bus_raw=bus_raw,
-        halte_raw=halte_raw,
+        bus_raw=bus,
+        halte_raw=halte,
         routes=dims["routes"],
         realisasi_bus=dims["realisasi_bus"],
         shelter_corridor=dims["shelter_corridor"],
@@ -216,6 +231,84 @@ def test_rerun_is_idempotent(spark, data_dir, wh_dir, pipeline_outputs):
     )
     after = spark.read.parquet(f"{wh_dir}/dw/agg_by_card").count()
     assert after == before
+
+
+FRESH_DAY = "2025-07-20"
+AGGS = ("agg_by_card", "agg_by_route", "agg_by_tariff")
+
+
+def _write_trx_csvs(data_dir, n_bus: int, n_halte: int) -> None:
+    """``n_bus``/``n_halte`` status-S transactions on FRESH_DAY plus one
+    failed transaction per file, which the day filter must drop."""
+
+    def write(name, schema, n, where_col, where):
+        rows = [
+            {
+                "uuid": f"{name}-{i}",
+                "waktu_transaksi": f"{FRESH_DAY} 08:00:00",
+                where_col: where,
+                "card_type_var": "emoney",
+                "fare_int": "3500",
+                "gate_in_boo": "true",
+                "status_var": "S" if i < n else "F",
+            }
+            for i in range(n + 1)
+        ]
+        with open(os.path.join(data_dir, f"dummy_transaksi_{name}.csv"), "w") as f:
+            f.write(",".join(schema.fieldNames()) + "\n")
+            for r in rows:
+                f.write(",".join(r.get(c, "") for c in schema.fieldNames()) + "\n")
+
+    write("bus", TRANSAKSI_BUS_RAW, n_bus, "no_body_var", "KLG 1")
+    write("halte", TRANSAKSI_HALTE_RAW, n_halte, "shelter_name_var", "Shelter 1")
+
+
+def _fresh_day_counts(spark, wh_dir) -> dict[str, int]:
+    return {
+        t: spark.read.parquet(f"{wh_dir}/dw/{t}/tanggal={FRESH_DAY}")
+        .agg(F.sum("pelanggan_count"))
+        .first()[0]
+        for t in AGGS
+    }
+
+
+def test_restaged_csv_is_read_fresh(spark, tmp_path):
+    """Staging a rewritten CSV again must not serve the first staging's
+    cache: a re-run of the day shows the new rows."""
+    data_dir, wh_dir = str(tmp_path / "in"), str(tmp_path / "wh")
+    os.makedirs(data_dir)
+    dims = {
+        "routes": spark.createDataFrame(
+            [("1", "Route 1")], "route_code string, route_name string"
+        ),
+        "realisasi_bus": spark.createDataFrame(
+            [("KLG 1", "1")], "body string, rute_realisasi string"
+        ).select(
+            F.lit(FRESH_DAY).cast("date").alias("tanggal_realisasi"),
+            norm_body(F.col("body")).alias("bus_body_no_norm"),
+            "rute_realisasi",
+        ),
+        "shelter_corridor": spark.createDataFrame(
+            [("Shelter 1", 1, "Corridor 1")],
+            "shelter_name_var string, corridor_code int, corridor_name string",
+        ),
+    }
+
+    def stage_and_run():
+        bus, halte = raw_trx_from_csv(spark, data_dir)
+        run_daily(
+            spark, FRESH_DAY, bus_raw=bus, halte_raw=halte, **dims,
+            wh=Warehouse(wh_dir),
+        )
+        return _fresh_day_counts(spark, wh_dir)
+
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with cache_scope(spark):
+        _write_trx_csvs(data_dir, n_bus=2, n_halte=1)
+        assert stage_and_run() == dict.fromkeys(AGGS, 3)
+        _write_trx_csvs(data_dir, n_bus=5, n_halte=2)
+        assert stage_and_run() == dict.fromkeys(AGGS, 7)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
 
 
 def test_partitioned_layout(spark, wh_dir, pipeline_outputs):
@@ -371,6 +464,110 @@ def test_atomic_commit_refuses_multi_day_input(spark, tmp_path):
 
     assert not os.path.exists(str(tmp_path / "t" / "tanggal=2025-01-01"))
     assert not os.path.exists(str(tmp_path / "t" / ".staging-2025-01-01"))
+
+
+def _day_frames(spark, day: str, stray_day: str | None = None) -> dict:
+    """Three small day frames; ``agg_by_route`` also holds ``stray_day``."""
+    frames = {}
+    for i, t in enumerate(AGGS):
+        days = [day] + ([stray_day] if stray_day and t == "agg_by_route" else [])
+        frames[t] = spark.range(2 + i).crossJoin(
+            spark.createDataFrame([(d,) for d in days], "d string")
+        ).select("id", F.col("d").cast("date").alias("tanggal"))
+    return frames
+
+
+def _jobs_of(spark, group: str, action) -> tuple[set, set]:
+    """Run ``action`` under job group ``group``; return the ids of the jobs
+    listed under the group and of the new jobs listed under none."""
+    sc = spark.sparkContext
+    listeners, tracker = sc._jsc.sc().listenerBus(), sc.statusTracker()
+    listeners.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    listeners.waitUntilEmpty()
+    return (
+        set(tracker.getJobIdsForGroup(group)),
+        set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    )
+
+
+def test_concurrent_writes_keep_the_callers_job_group(spark, data_dir, tmp_path):
+    """The staged writes of a commit and the dim writes of load_dims run
+    on their own threads; every job they submit must still be listed
+    under the caller's job group (per-operation job attribution)."""
+    day = "2025-03-01"
+    outs = {t: (df, str(tmp_path / t)) for t, df in _day_frames(spark, day).items()}
+    grouped, ungrouped = _jobs_of(
+        spark, "test:commit",
+        lambda: lake_io.commit_partitions_atomic(outs, day=day),
+    )
+    assert len(grouped) >= len(AGGS) and not ungrouped, (grouped, ungrouped)
+
+    grouped, ungrouped = _jobs_of(
+        spark, "test:load_dims",
+        lambda: load_dims(spark, data_dir, Warehouse(str(tmp_path / "wh"))),
+    )
+    assert len(grouped) >= 3 and not ungrouped, (grouped, ungrouped)
+
+
+def test_concurrent_commit_with_a_stray_day_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """One of three tables holds a second day: the commit raises, and no
+    table keeps a staging directory or shows the day, although the other
+    two staged writes only finish after the failing one has raised."""
+    day, stray = "2025-03-01", "2025-03-02"
+    outs = {
+        t: (df, str(tmp_path / t))
+        for t, df in _day_frames(spark, day, stray_day=stray).items()
+    }
+    failed = threading.Event()
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        # The stray table's write completes first and the others only
+        # start then, so they finish after its stray check has raised.
+        if "agg_by_route" not in path:
+            assert failed.wait(timeout=60)
+        real_parquet(self, path, *args, **kwargs)
+        written.append(path)
+        failed.set()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(ValueError, match="partitions beyond"):
+        lake_io.commit_partitions_atomic(outs, day=day)
+    assert len(written) == len(AGGS)  # the commit waited for every write
+    for t in AGGS:
+        assert not os.path.exists(str(tmp_path / t / f".staging-{day}")), t
+        assert not os.path.exists(str(tmp_path / t / f"tanggal={day}")), t
+
+
+def test_concurrent_commit_counts_every_staged_write(spark, tmp_path):
+    """Eight concurrent staged writes with a tiny switch interval: the
+    crash hook fires only if no completion count is lost, and the crash
+    still leaves no staging directory or partition behind."""
+    import sys
+
+    day = "2025-03-01"
+    df = spark.range(2).select("id", F.lit(day).cast("date").alias("tanggal"))
+    outs = {f"t{i}": (df, str(tmp_path / f"t{i}")) for i in range(8)}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            lake_io.commit_partitions_atomic(outs, day=day, _fail_after=len(outs))
+    finally:
+        sys.setswitchinterval(interval)
+    for t, (_df, path) in outs.items():
+        assert not os.path.exists(os.path.join(path, f".staging-{day}")), t
+        assert not os.path.exists(os.path.join(path, f"tanggal={day}")), t
 
 
 def test_csv_staging_quarantines_corrupt_rows(spark, tmp_path):
